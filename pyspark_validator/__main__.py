@@ -39,6 +39,12 @@ expected-vs-actual StructType diff, params = SchemaSpec.from_dict form);
 sketch_profile (one-pass HLL+CMS+KLL per column; params = {"columns": [...],
 "store_path": optional SketchStore dir for cross-snapshot merge/drift});
 custom (python callable, API only).
+
+Each check prints one JSON line; "partitions" counts the verdicts computed in
+this run. With a checkpoint_path, "violated_partitions", "holds" and the exit
+code (3 on any violation) come from every verdict recorded for the snapshot,
+so a rerun that recomputes nothing still fails a violated gate, and leaves
+the "output" verdicts of a check it skipped as the earlier run wrote them.
 """
 
 from __future__ import annotations
@@ -86,14 +92,26 @@ def main(argv: list[str] | None = None) -> int:
     # "fuse": true -> aggregation-shaped checks share one scan (fused.py);
     # non-fusable kinds run on the standard per-check path either way
     results = suite.run_fused(checks) if spec.get("fuse") else suite.run(checks)
+    # with a checkpoint, the gate is every verdict recorded for the snapshot,
+    # not just the partitions this run computed: a retried job that resumes
+    # past a violated partition must still fail
+    statuses = (
+        suite.ckpt.recorded(suite.snapshot_id, list(results))
+        if suite.ckpt is not None
+        else None
+    )
     exit_code = 0
     for name, verdicts in results.items():
         rows = verdicts.collect()
-        n_viol = sum(0 if r.holds else 1 for r in rows)
+        if statuses is None:
+            n_viol = sum(0 if r.holds else 1 for r in rows)
+        else:
+            n_viol = sum(s == "violated" for s in statuses.get(name, {}).values())
         print(
             json.dumps(
                 {
                     "check": name,
+                    # computed in this run
                     "partitions": len(rows),
                     "violated_partitions": n_viol,
                     "holds": n_viol == 0,
@@ -102,7 +120,8 @@ def main(argv: list[str] | None = None) -> int:
         )
         if n_viol:
             exit_code = 3
-        if spec.get("output"):
+        # a check that computed nothing keeps the previous run's output
+        if spec.get("output") and (rows or statuses is None):
             verdicts.write.mode("overwrite").parquet(f"{spec['output']}/{name}")
     q = spec.get("quarantine")
     if q:

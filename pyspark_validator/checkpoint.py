@@ -6,9 +6,10 @@ instead of recomputing (dynamic_fd_verifier.h:20-45, dynamic_position_list_index
 Our distributed analog is lineage-based: every completed (check_id, snapshot_id,
 partition_id) is recorded with its metrics in an append-only parquet manifest
 (Iceberg-manifest shaped: on a real deployment this table IS an Iceberg table and
-snapshot_id is the source table's snapshot id). Resume = broadcast anti-join of the
-pending work against the manifest -- the manifest is tiny (one row per logical
-partition per check), so the filter costs nothing at any scale.
+snapshot_id is the source table's snapshot id). Resume reads the manifest once per
+run into a driver-side {check_id -> {partition_id -> status}} map (``recorded``:
+one filtered collect of P rows per check) and cuts the pending work with a literal
+``partition_id IN (...)`` list, so a check with nothing pending costs no Spark job.
 """
 
 from __future__ import annotations
@@ -62,15 +63,33 @@ class CheckpointManager:
             return self.spark.createDataFrame([], MANIFEST_SCHEMA)
 
     def completed_partitions(self, check_id: str, snapshot_id: str) -> DataFrame:
-        return (
+        done = self.recorded(snapshot_id, [check_id]).get(check_id, {})
+        return self.spark.createDataFrame(
+            [(p,) for p in sorted(done)], "partition_id int"
+        )
+
+    def recorded(
+        self, snapshot_id: str, check_ids: list[str]
+    ) -> dict[str, dict[int, str]]:
+        """{check_id -> {partition_id -> status}} recorded for one snapshot,
+        from one filtered collect of the manifest (one Spark job, no shuffle;
+        P rows per check). A partition recorded more than once keeps its
+        latest status, the last-wins rule of ``metric_history``; within one
+        batch (rows sharing ``completed_at``, e.g. a schema check's one row
+        per column, all partition 0) a violated row wins."""
+        rows = (
             self.manifest()
             .filter(
-                (F.col("check_id") == check_id)
-                & (F.col("snapshot_id") == snapshot_id)
+                (F.col("snapshot_id") == snapshot_id)
+                & F.col("check_id").isin(check_ids)
             )
-            .select("partition_id")
-            .distinct()
+            .select("check_id", "partition_id", "status", "completed_at")
+            .collect()
         )
+        out: dict[str, dict[int, str]] = {}
+        for r in sorted(rows, key=lambda r: (r.completed_at, r.status == "violated")):
+            out.setdefault(r.check_id, {})[r.partition_id] = r.status
+        return out
 
     def filter_pending(
         self,
@@ -80,15 +99,9 @@ class CheckpointManager:
         partition_col: str = "partition_id",
     ) -> DataFrame:
         """Drop rows whose logical partition is already validated for this
-        (check, snapshot). Broadcast anti-join: manifest side is tiny."""
-        done = F.broadcast(
-            self.completed_partitions(check_id, snapshot_id).withColumnRenamed(
-                "partition_id", "__done_pid"
-            )
-        )
-        return df.join(
-            done, on=df[partition_col] == done["__done_pid"], how="left_anti"
-        )
+        (check, snapshot): a literal NOT IN over the recorded partition ids."""
+        done = self.recorded(snapshot_id, [check_id]).get(check_id)
+        return df.where(~F.col(partition_col).isin(sorted(done))) if done else df
 
     def record_verdicts(
         self,

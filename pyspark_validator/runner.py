@@ -13,22 +13,48 @@ from dataclasses import dataclass, field
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from pyspark_validator.canonical import CanonicalDocs, canonicalize
 from pyspark_validator.checkpoint import CheckpointManager
 from pyspark_validator.checks.fd import fd_check
 from pyspark_validator.checks.ucc import ucc_check
+from pyspark_validator.fused import FUSABLE_KINDS
+
+#: Kinds that give one verdict for the whole table, framed as partition 0.
+_WHOLE_TABLE_KINDS = frozenset(
+    {"nd", "sfd", "nar", "mfd", "sd", "md", "sketch_profile", "schema",
+     "assoc", "reconcile", "precedence", "interval_overlap", "outlier"}
+)
+#: Aggregation-shaped kinds whose only home is fused.py: ``run`` executes
+#: each as a single-member FusedPass keyed by the canonical partition_id.
+#: nar and ac also fuse but have their own ``_verdicts_for`` branches.
+_FUSED_ONLY_KINDS = FUSABLE_KINDS - {"nar", "ac"}
+
+
+def _pending(
+    recorded: dict[str, dict[int, str]], name: str, universe: range
+) -> list[int]:
+    done = recorded.get(name, {})
+    return [p for p in universe if p not in done]
 
 
 @dataclass
 class CheckSpec:
     """One named check. ``kind`` in {'ucc','fd','ind','nd','mfd','sd','md',
     'ac','nar','sfd','anon','assoc','reconcile','precedence','outlier',
-    'interval_overlap','custom'}; ``params`` are forwarded; single-row checks
-    (nd/mfd/sd/md/ac/nar/assoc/reconcile/precedence/interval_overlap) are
-    framed as partition 0 for the manifest;
+    'interval_overlap','custom'}; ``params`` are forwarded;
     'custom' takes fn(canon_df) -> verdicts DataFrame with a partition_id +
-    holds column."""
+    holds column.
+
+    Scope: whole-table checks (``_WHOLE_TABLE_KINDS``) give one verdict,
+    framed as partition 0 for the manifest; every other kind gives one
+    verdict per logical partition 0..P-1. With a checkpoint, a check whose
+    partitions are all recorded for the snapshot is skipped. Otherwise only
+    kinds whose verdict partition is the canonical doc ``partition_id``
+    (``ValidationSuite._doc_partitioned``) read just their pending
+    partitions; every other kind reads the full frame and keeps its pending
+    verdicts."""
 
     name: str
     kind: str
@@ -92,8 +118,6 @@ class ValidationSuite:
                 df, spec.params["lhs"], rhs_df, spec.params["rhs"]
             ).verdicts(num_partitions=self.num_partitions)
         if spec.kind == "nd":
-            from pyspark.sql import functions as F
-
             from pyspark_validator.checks.nd import nd_check
 
             # single-row verdict framed as partition 0 for the manifest
@@ -105,8 +129,6 @@ class ValidationSuite:
                 num_partitions=self.num_partitions,
             ).withColumn("partition_id", F.lit(0))
         if spec.kind == "sfd":
-            from pyspark.sql import functions as F
-
             from pyspark_validator.checks.sfd import sfd_check
 
             s = sfd_check(
@@ -131,9 +153,7 @@ class ValidationSuite:
                 "partition_id", F.lit(0)
             )
         if spec.kind in ("ac", "nar"):
-            # single-row verdict checks framed as partition 0 for the manifest
-            from pyspark.sql import functions as F
-
+            # ac: per-partition verdicts; nar: one verdict framed as partition 0
             if spec.kind == "ac":
                 from pyspark_validator.canonical import partition_id_expr
                 from pyspark_validator.checks.ac import ac_check
@@ -196,8 +216,6 @@ class ValidationSuite:
             # one-pass HLL+CMS+KLL profile (sketches.sketch_profile);
             # informational verdict, optionally persisted to a SketchStore so
             # later snapshots can merge/drift without rescanning this one
-            from pyspark.sql import functions as F
-
             from pyspark_validator.sketches import sketch_profile
 
             prof = sketch_profile(
@@ -222,8 +240,6 @@ class ValidationSuite:
             return v.withColumn("partition_id", F.lit(0))
         if spec.kind == "schema":
             # metadata-only (no scan); framed as partition 0 for the manifest
-            from pyspark.sql import functions as F
-
             from pyspark_validator.schema import (
                 SchemaSpec,
                 _VERDICT_SCHEMA,
@@ -250,8 +266,6 @@ class ValidationSuite:
                 num_partitions=self.num_partitions,
             ).verdicts()
         if spec.kind == "assoc":
-            from pyspark.sql import functions as F
-
             from pyspark_validator.checks.assoc import assoc_check
 
             # verdict framing: expect 'independent' (default -- these columns
@@ -280,8 +294,6 @@ class ValidationSuite:
                 "partition_id", F.lit(0)
             )
         if spec.kind == "reconcile":
-            from pyspark.sql import functions as F
-
             from pyspark_validator.checks.reconcile import reconciliation_check
 
             child = spec.params.get("child_df")
@@ -300,8 +312,6 @@ class ValidationSuite:
             ).summary()
             return s.withColumn("partition_id", F.lit(0))
         if spec.kind == "precedence":
-            from pyspark.sql import functions as F
-
             from pyspark_validator.checks.temporal import precedence_check
 
             s = precedence_check(
@@ -314,8 +324,6 @@ class ValidationSuite:
             )
             return s.withColumn("partition_id", F.lit(0))
         if spec.kind == "interval_overlap":
-            from pyspark.sql import functions as F
-
             from pyspark_validator.checks.temporal import interval_overlap_check
 
             s = interval_overlap_check(
@@ -327,8 +335,6 @@ class ValidationSuite:
             )
             return s.withColumn("partition_id", F.lit(0))
         if spec.kind == "outlier":
-            from pyspark.sql import functions as F
-
             from pyspark_validator.checks.outlier import outlier_check
 
             s = outlier_check(
@@ -349,8 +355,6 @@ class ValidationSuite:
             return s.withColumn("partition_id", F.lit(0))
         if spec.kind in ("mfd", "sd", "md"):
             # single-row verdict checks framed as partition 0 for the manifest
-            from pyspark.sql import functions as F
-
             if spec.kind == "mfd":
                 from pyspark_validator.checks.mfd import mfd_check
 
@@ -381,21 +385,7 @@ class ValidationSuite:
                     left_id=spec.params.get("left_id", "doc_id"),
                 ).summary()
             return s.withColumn("partition_id", F.lit(0))
-        if spec.kind in (
-            "distinct",
-            "row_predicate",
-            "completeness",
-            "numeric_profile",
-            "histogram_drift",
-            "type_conformance",
-            "span_integrity",
-            "pii_budget",
-            "token_budget",
-            "media_context",
-            "interleaved_quality",
-            "benford",
-            "class_balance",
-        ):
+        if spec.kind in _FUSED_ONLY_KINDS:
             # agg-shaped kinds whose only home is fused.py: run each as its
             # own single-member pass so they work without "fuse": true too
             from pyspark_validator.fused import FusedPass, member_from_spec
@@ -413,20 +403,76 @@ class ValidationSuite:
             return spec.fn(df)
         raise ValueError(f"unknown check kind: {spec.kind}")
 
+    def _universe(self, spec: CheckSpec) -> range:
+        """The verdict partitions a complete run of ``spec`` records."""
+        if spec.kind in _WHOLE_TABLE_KINDS:
+            return range(1)
+        return range(self.num_partitions)
+
+    @staticmethod
+    def _doc_partitioned(spec: CheckSpec) -> bool:
+        """Whether the verdict partition of ``spec`` is the canonical doc
+        ``partition_id``, so a resume may cut its input to the pending
+        partitions before it runs."""
+        if spec.kind == "ucc":
+            return spec.params.get("partition_key", "doc_id") == "doc_id"
+        if spec.kind == "fd":
+            return list(spec.params["lhs"]) == ["doc_id"]
+        return spec.kind in _FUSED_ONLY_KINDS
+
+    def _recorded(self, checks: list[CheckSpec]) -> dict[str, dict[int, str]]:
+        """One manifest read for the whole run (empty without a checkpoint)."""
+        if self.ckpt is None or not checks:
+            return {}
+        return self.ckpt.recorded(self.snapshot_id, [s.name for s in checks])
+
+    def _empty(self) -> DataFrame:
+        """The verdicts of a skipped check: planned without a Spark job."""
+        return self.canon.df.select(
+            "partition_id", F.lit(True).alias("holds")
+        ).where(F.lit(False))
+
+    def _record(self, name: str, verdicts: DataFrame) -> DataFrame:
+        if self.ckpt is None:
+            return verdicts
+        # materialize once so record + return don't recompute
+        verdicts = verdicts.localCheckpoint(eager=True)
+        self.ckpt.record_verdicts(name, self.snapshot_id, verdicts)
+        return verdicts
+
     def run(self, checks: list[CheckSpec]) -> dict[str, DataFrame]:
         """Execute checks, resuming past completed partitions. Returns the verdict
-        DataFrame per check (only the partitions computed in THIS run)."""
+        DataFrame per check (only the partitions computed in THIS run).
+
+        The manifest is read once per call. A check with every partition of
+        its scope recorded is skipped: it is not built and records nothing,
+        and its result is an empty frame with only the ``partition_id`` and
+        ``holds`` columns, not the check's full verdict schema. A check with some partitions
+        recorded keeps only its pending verdicts, and reads only its pending
+        partitions when its verdict partition is the doc partition (see
+        ``CheckSpec``)."""
+        return self._run(checks, self._recorded(checks))
+
+    def _run(
+        self, checks: list[CheckSpec], recorded: dict[str, dict[int, str]]
+    ) -> dict[str, DataFrame]:
         results: dict[str, DataFrame] = {}
         for spec in checks:
+            universe = self._universe(spec)
+            pending = _pending(recorded, spec.name, universe)
+            if not pending:
+                results[spec.name] = self._empty()
+                continue
             df = self.canon.df
-            if self.ckpt is not None:
-                df = self.ckpt.filter_pending(df, spec.name, self.snapshot_id)
+            keep = None
+            if len(pending) < len(universe):
+                keep = F.col("partition_id").isin(pending)
+                if self._doc_partitioned(spec):
+                    df = df.where(keep)
             verdicts = self._verdicts_for(spec, df)
-            if self.ckpt is not None:
-                # materialize once so record + return don't recompute
-                verdicts = verdicts.localCheckpoint(eager=True)
-                self.ckpt.record_verdicts(spec.name, self.snapshot_id, verdicts)
-            results[spec.name] = verdicts
+            if keep is not None:
+                verdicts = verdicts.where(keep)
+            results[spec.name] = self._record(spec.name, verdicts)
         return results
 
     def run_fused(self, checks: list[CheckSpec]) -> dict[str, DataFrame]:
@@ -436,57 +482,43 @@ class ValidationSuite:
         (the north-rule shape) instead of the partition-0 framing ``run``
         uses for single-row checks.
 
-        Resume composes: the fused scan reads only partitions pending for at
-        least one fused check, and each check's verdicts are post-filtered to
-        its own pending set before being recorded -- identical manifest
-        semantics to the per-check path at one scan's cost."""
-        from pyspark.sql import functions as F
-
+        Resume composes: the manifest is read once and shared with the
+        fallback ``run``. A check recorded for every partition is skipped
+        before it is routed; the fused pass runs only when a member has
+        something pending, scans only partitions pending for at least one
+        member, and each member records only its own pending verdicts."""
         from pyspark_validator.fused import FusedPass, member_from_spec
 
+        recorded = self._recorded(checks)
+        every = range(self.num_partitions)
         fp = FusedPass(
             self.canon.df,
             num_partitions=self.num_partitions,
             partition_col="partition_id",
         )
-        fused_names: list[str] = []
+        results: dict[str, DataFrame] = {}
+        fused: dict[str, list[int]] = {}
         rest: list[CheckSpec] = []
         for spec in checks:
-            if member_from_spec(fp, spec.name, spec.kind, spec.params):
-                fused_names.append(spec.name)
+            todo = _pending(recorded, spec.name, every)
+            if not todo:
+                results[spec.name] = self._empty()
+            elif member_from_spec(fp, spec.name, spec.kind, spec.params):
+                fused[spec.name] = todo
             else:
                 rest.append(spec)
-        results = self.run(rest) if rest else {}
-        if not fused_names:
-            return results
-        if self.ckpt is not None:
-            # scan only partitions pending for >= 1 fused check: drop those
-            # done for ALL of them
-            manifest = self.ckpt.manifest().filter(
-                (F.col("snapshot_id") == self.snapshot_id)
-                & F.col("check_id").isin(fused_names)
-            )
-            done_all = (
-                manifest.groupBy("partition_id")
-                .agg(F.count_distinct("check_id").alias("k"))
-                .filter(F.col("k") == len(fused_names))
-                .select("partition_id")
-            )
+        results.update(self._run(rest, recorded))
+        scan = sorted(set().union(*fused.values()))
+        if fused and len(scan) < len(every):
             # safe to swap the frame post-registration: member exprs are
             # unbound F.col references, resolved when grouped() runs
-            fp.df = fp.df.join(
-                F.broadcast(done_all.withColumnRenamed("partition_id", "__done")),
-                on=fp.df["partition_id"] == F.col("__done"),
-                how="left_anti",
-            )
-        for name in fused_names:
+            fp.df = fp.df.where(F.col("partition_id").isin(scan))
+        for name, todo in fused.items():
             v = fp.verdict(name)
-            if self.ckpt is not None:
-                v = self.ckpt.filter_pending(v, name, self.snapshot_id)
-                v = v.localCheckpoint(eager=True)
-                self.ckpt.record_verdicts(name, self.snapshot_id, v)
-            results[name] = v
-        return results
+            if len(todo) < len(every):
+                v = v.where(F.col("partition_id").isin(todo))
+            results[name] = self._record(name, v)
+        return {spec.name: results[spec.name] for spec in checks}
 
     def unpersist(self) -> None:
         self.canon.unpersist()

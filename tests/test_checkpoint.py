@@ -430,3 +430,236 @@ def test_concurrent_suite_runs_union_without_clobbering(spark, tmp_path):
         (F.col("id") % 5).cast("int").alias("partition_id"), F.col("id")
     )
     assert b.filter_pending(df, "c1", "s1").count() == 0
+
+
+# ---------------------------------------------------------------------------
+# Scope-correct verdicts and zero-work reruns. A whole-table check is one
+# verdict over the whole frame: a rerun must skip it, never recompute it on a
+# frame emptied of its already-recorded partitions. A per-partition check
+# whose verdict partition is not the doc partition (IND keys by hash(ref))
+# runs on the full frame and keeps only its pending partitions.
+# ---------------------------------------------------------------------------
+
+
+def _batches(path: str) -> list[str]:
+    import glob
+
+    return sorted(glob.glob(f"{path}/batch-*"))
+
+
+def test_rerun_keeps_whole_table_nar_verdict(spark, tmp_path):
+    """A NAR rule violated only by partition-0 docs: the rerun skips the
+    recorded whole-table verdict instead of re-recording holds=True."""
+    from pyspark_validator.canonical import partition_id_expr
+
+    docs = spark.range(400).select(
+        F.concat(F.lit("d"), F.col("id").cast("string")).alias("doc_id"),
+        F.lit("F").alias("status"),
+    )
+    docs = docs.withColumn(
+        "a",
+        F.when(partition_id_expr("doc_id", 8) == 0, F.lit(100.0)).otherwise(1.0),
+    )
+    path = str(tmp_path / "m")
+    nar = CheckSpec(
+        name="nar_a",
+        kind="nar",
+        params={
+            "ante": {"status": {"in": ["F"]}},
+            "cons": {"a": {"between": [0.0, 10.0]}},
+        },
+    )
+
+    def suite():
+        return ValidationSuite(
+            spark, docs, num_partitions=8, checkpoint_path=path, snapshot_id="s"
+        )
+
+    s1 = suite()
+    first = s1.run([nar])["nar_a"].collect()
+    assert len(first) == 1 and not first[0].holds and first[0].confidence < 1.0
+    s2 = suite()
+    assert s2.run([nar])["nar_a"].count() == 0
+    hist = s2.ckpt.metric_history("nar_a", "confidence").collect()
+    assert [(r.partition_id, r.status) for r in hist] == [(0, "violated")]
+    assert s2.ckpt.manifest().count() == 1
+    s1.unpersist()
+    s2.unpersist()
+
+
+def test_partial_resume_ind_reads_full_frame(spark, tmp_path):
+    """IND verdict partitions are keyed by hash(ref), not by doc partition:
+    a resume must read the whole frame and record only the pending verdict
+    partitions, each with the counts a clean run gives."""
+    from pyspark_validator.checks.ind import ind_check
+
+    docs = spark.range(200).select(
+        F.concat(F.lit("d"), F.col("id").cast("string")).alias("doc_id"),
+        (F.col("id") % 50).alias("fk"),
+    )
+    dim = spark.range(45).select(F.col("id").alias("pk"))
+    path = str(tmp_path / "m")
+    full_df = ind_check(docs, ["fk"], dim, ["pk"]).verdicts(num_partitions=8)
+    full = {r.partition_id: tuple(r) for r in full_df.collect()}
+    assert set(full) == set(range(8))
+    ckpt = CheckpointManager(spark, path)
+    ckpt.record_verdicts("ind_fk", "s", full_df.where(F.col("partition_id") < 4))
+    suite = ValidationSuite(
+        spark, docs, num_partitions=8, checkpoint_path=path, snapshot_id="s"
+    )
+    spec = CheckSpec(
+        name="ind_fk", kind="ind", params={"lhs": ["fk"], "rhs": ["pk"], "rhs_df": dim}
+    )
+    got = {r.partition_id: tuple(r) for r in suite.run([spec])["ind_fk"].collect()}
+    assert got == {p: full[p] for p in range(4, 8)}
+    recorded = sorted(r.partition_id for r in ckpt.manifest().collect())
+    assert recorded == list(range(8))  # 0-3 not re-recorded
+    suite.unpersist()
+
+
+def test_rerun_sketch_profile_adds_no_store_batch(spark, tmp_path):
+    from pyspark_validator.checkpoint import SketchStore
+
+    docs = spark.createDataFrame(
+        [(f"d{i}", float(i % 11)) for i in range(300)], ["doc_id", "score"]
+    )
+    store_path = str(tmp_path / "sk")
+    spec = CheckSpec(
+        name="prof",
+        kind="sketch_profile",
+        params={"columns": ["score"], "store_path": store_path, "fanin": 4},
+    )
+    for _ in range(2):
+        suite = ValidationSuite(
+            spark, docs, num_partitions=4, snapshot_id="s1",
+            checkpoint_path=str(tmp_path / "m"),
+        )
+        suite.run([spec])
+        suite.unpersist()
+    assert len(_batches(store_path)) == 1
+    assert len(_batches(str(tmp_path / "m"))) == 1
+    assert set(SketchStore(spark, store_path).load("s1")) == {"score"}
+
+
+@pytest.mark.parametrize("fused", [False, True])
+def test_rerun_over_complete_manifest_is_one_job(spark, tmp_path, fused):
+    """A rerun over a complete manifest reads the manifest once (one Spark
+    job) and writes no manifest batch."""
+    docs = fixtures.docs_spark_df(spark, 300)
+    path = str(tmp_path / "m")
+    checks = [
+        CheckSpec(name="ucc_doc_id", kind="ucc", params={"columns": ["doc_id"]}),
+        CheckSpec(name="spans_ok", kind="span_integrity"),
+    ]
+
+    def run(suite):
+        return suite.run_fused(checks) if fused else suite.run(checks)
+
+    first = ValidationSuite(spark, docs, num_partitions=8, checkpoint_path=path)
+    assert {n: v.count() for n, v in run(first).items()} == {
+        "ucc_doc_id": 8, "spans_ok": 8,
+    }
+    batches = _batches(path)
+    assert len(batches) == 2  # one batch per check
+    rerun = ValidationSuite(spark, docs, num_partitions=8, checkpoint_path=path)
+    sc = spark.sparkContext
+    grp = f"rerun_audit_{fused}"
+    sc.setJobGroup(grp, "audit")
+    try:
+        out = run(rerun)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(grp)) == 1
+    assert {n: v.count() for n, v in out.items()} == {"ucc_doc_id": 0, "spans_ok": 0}
+    assert _batches(path) == batches
+    first.unpersist()
+    rerun.unpersist()
+
+
+def test_fused_pass_on_fresh_checkpoint_has_no_join(spark, tmp_path, monkeypatch):
+    from pyspark_validator.fused import FusedPass
+
+    plans = []
+    grouped = FusedPass.grouped
+
+    def spy(self):
+        g = grouped(self)
+        plans.append(g._jdf.queryExecution().executedPlan().toString())
+        return g
+
+    monkeypatch.setattr(FusedPass, "grouped", spy)
+    suite = ValidationSuite(
+        spark, fixtures.docs_spark_df(spark, 300), num_partitions=8,
+        checkpoint_path=str(tmp_path / "m"),
+    )
+    suite.run_fused(
+        [
+            CheckSpec(name="spans_ok", kind="span_integrity"),
+            CheckSpec(name="n_ok", kind="completeness", params={"column": "doc_id"}),
+        ]
+    )
+    assert plans and all("Join" not in p for p in plans)
+    suite.unpersist()
+
+
+def test_whole_table_kinds_match_verdict_framing(spark):
+    """``_WHOLE_TABLE_KINDS`` must name exactly the kinds whose verdicts are
+    all partition 0: a whole-table kind left out would get the universe
+    range(P), never complete, and be recomputed on every rerun."""
+    from pyspark_validator.checks.md import ColumnMatch
+    from pyspark_validator.runner import _FUSED_ONLY_KINDS, _WHOLE_TABLE_KINDS
+
+    docs = spark.range(64).select(
+        F.concat(F.lit("d"), F.col("id").cast("string")).alias("doc_id"),
+        (F.col("id") % 5).cast("string").alias("grp"),
+        F.when(F.col("id") % 2 == 0, "F").otherwise("G").alias("status"),
+        (F.col("id") % 50).alias("fk"),
+        F.col("id").cast("int").alias("ts"),
+        (F.col("id") % 10).cast("double").alias("a"),
+        (F.col("id") % 10 + 2).cast("double").alias("b"),
+    )
+    whole = {
+        "nd": {"lhs": ["grp"], "rhs": ["fk"], "weight": 20},
+        "sfd": {"col_a": "a", "col_b": "b"},
+        "nar": {"ante": {"status": {"in": ["F"]}},
+                "cons": {"a": {"between": [0.0, 9.0]}}},
+        "mfd": {"lhs": ["grp"], "rhs": ["a"], "parameter": 100.0},
+        "sd": {"order_col": "ts", "value_col": "a"},
+        "md": {"lhs": [ColumnMatch("equality", "grp", "grp", 1.0)],
+               "rhs": ColumnMatch("equality", "status", "status", 1.0)},
+        "sketch_profile": {"columns": ["a"], "fanin": 4},
+        "schema": {"columns": [{"name": "doc_id", "dtype": "string"}]},
+        "assoc": {"col_a": "grp", "col_b": "status"},
+        "reconcile": {"child_df": docs.select("doc_id", "a"),
+                      "parent_keys": ["doc_id"], "child_keys": ["doc_id"],
+                      "stored": "a", "derived_agg": "sum(a)"},
+        "precedence": {"keys": ["grp"], "ts_col": "ts",
+                       "antecedent": "status = 'F'",
+                       "consequent": "status = 'G'"},
+        "interval_overlap": {"keys": ["grp"], "start_col": "a", "end_col": "b"},
+        "outlier": {"column": "a"},
+    }
+    per_partition = {
+        "ucc": {"columns": ["doc_id"]},
+        "fd": {"lhs": ["doc_id"], "rhs": ["grp"]},
+        "ind": {"lhs": ["fk"], "rhs": ["fk"], "rhs_df": docs},
+        "ac": {"lhs": "b", "rhs": "a", "binop": "-", "ranges": [[0.0, 9.0]]},
+        "anon": {"quasi_identifiers": ["grp"], "k": 2},
+        "completeness": {"column": "doc_id"},
+    }
+    assert set(whole) == _WHOLE_TABLE_KINDS
+    assert not _FUSED_ONLY_KINDS & _WHOLE_TABLE_KINDS
+    suite = ValidationSuite(spark, docs, num_partitions=4)
+    specs = [
+        CheckSpec(name=k, kind=k, params=p)
+        for k, p in {**whole, **per_partition}.items()
+    ]
+    got = {
+        name: {r.partition_id for r in v.select("partition_id").collect()}
+        for name, v in suite.run(specs).items()
+    }
+    for k in whole:
+        assert got[k] == {0}, k
+    for k in per_partition:
+        assert len(got[k]) > 1, k
+    suite.unpersist()

@@ -54,12 +54,60 @@ def test_cli_violations_exit_code(spark, tmp_path, capsys):
     spec = {
         "table": str(src),
         "num_partitions": 4,
+        "checkpoint_path": str(tmp_path / "manifest"),
         "checks": [{"name": "ucc", "kind": "ucc", "params": {"columns": ["doc_id"]}}],
     }
     spec_path = tmp_path / "spec2.json"
     spec_path.write_text(json.dumps(spec))
     rc = main(["--spec", str(spec_path)])
     assert rc == 3  # violations found
+    capsys.readouterr()
+    # a retried run recomputes nothing, yet still fails on the recorded verdicts
+    rc2 = main(["--spec", str(spec_path)])
+    assert rc2 == 3
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[0])
+    assert out["partitions"] == 0 and not out["holds"]
+    assert out["violated_partitions"] == 1
+
+
+def test_cli_checkpointed_schema_violation_exit_code(spark, tmp_path, capsys):
+    """A schema check records one manifest row per column, all as partition 0
+    in one batch: a violated column must fail the gate even when an ok column
+    is recorded after it, on the first run and on the rerun."""
+    src = tmp_path / "docs3.parquet"
+    spark.createDataFrame([("d1", "a")], ["doc_id", "span_seq"]).write.parquet(
+        str(src)
+    )
+    spec = {
+        "table": str(src),
+        "num_partitions": 4,
+        "checkpoint_path": str(tmp_path / "manifest"),
+        "output": str(tmp_path / "verdicts"),
+        "checks": [
+            {
+                "name": "shape",
+                "kind": "schema",
+                "params": {
+                    "columns": [
+                        {"name": "license", "dtype": "string"},
+                        {"name": "doc_id", "dtype": "string"},
+                        {"name": "span_seq", "dtype": "string"},
+                    ]
+                },
+            }
+        ],
+    }
+    spec_path = tmp_path / "spec3.json"
+    spec_path.write_text(json.dumps(spec))
+    for _ in range(2):
+        assert main(["--spec", str(spec_path)]) == 3
+        out = json.loads(capsys.readouterr().out.strip().splitlines()[0])
+        assert not out["holds"] and out["violated_partitions"] == 1
+    # the rerun computed nothing, so it kept the first run's verdict output
+    kept = spark.read.parquet(str(tmp_path / "verdicts" / "shape"))
+    assert {r.column: r.holds for r in kept.collect()} == {
+        "license": False, "doc_id": True, "span_seq": True,
+    }
 
 
 def test_report_sink(spark, tmp_path):
