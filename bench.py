@@ -236,7 +236,7 @@ def _fs_bytes_read(spark) -> int:
 
 def _fused_compare(spark, sf_dir: str, rep: int, materialize: str | None = None) -> dict:
     """The engine's second bench axis: the SAME 15 aggregation-shaped checks
-    (one per FUSABLE_KINDS member) timed as 15 independent single-member
+    (one per FusedPass member family) timed as 15 independent single-member
     passes (one corpus scan each -- how separately-invoked checks execute)
     versus ONE FusedPass (one scan + one P-row shuffle for all of them).
     ``rep`` amplifies the documents table in-memory with distinct doc ids so

@@ -17,7 +17,6 @@ Spec format (JSON):
   "checkpoint_path": "/path/to/manifest",  # optional -> resume support
   "snapshot_id": "snap-001",
   "output": "/path/to/verdicts",           # verdict parquet dir (optional)
-  "fuse": true,                            # one-scan fused agg checks (fused.py)
   "quarantine": {"output": "/path"},       # optional: route docs by span
                                            # integrity -> <output>/clean + /quarantined
                                            # parquet (schema.quarantine_by_integrity);
@@ -29,16 +28,18 @@ Spec format (JSON):
   ]
 }
 
-Check kinds: ucc fd ind nd sfd ac nar mfd sd md anon assoc reconcile
-precedence interval_overlap outlier (dependency / integrity verifiers);
-completeness row_predicate numeric_profile histogram_drift distinct
-type_conformance span_integrity pii_budget token_budget media_context
-interleaved_quality benford class_balance (agg-shaped -- these share one scan under
-"fuse": true and run as single-member passes otherwise); schema (metadata-only
-expected-vs-actual StructType diff, params = SchemaSpec.from_dict form);
-sketch_profile (one-pass HLL+CMS+KLL per column; params = {"columns": [...],
-"store_path": optional SketchStore dir for cross-snapshot merge/drift});
-custom (python callable, API only).
+Check kinds (runner.KINDS):
+  per partition: ucc fd ind ac anon custom (python callable, API only), and
+    the aggregation-shaped row_predicate completeness numeric_profile
+    histogram_drift distinct type_conformance span_integrity pii_budget
+    benford class_balance token_budget media_context interleaved_quality,
+    which share one scan (fused.py) together with an ac check that has
+    "ranges" and the default "partition_key" doc_id;
+  whole table (one verdict, partition 0): nd sfd nar mfd sd md assoc
+    reconcile precedence interval_overlap outlier, schema (metadata-only
+    expected-vs-actual StructType diff, params = SchemaSpec.from_dict form)
+    and sketch_profile (one-pass HLL+CMS+KLL per column; params =
+    {"columns": [...], "store_path": optional SketchStore dir}).
 
 Each check prints one JSON line; "partitions" counts the verdicts computed in
 this run. With a checkpoint_path, "violated_partitions", "holds" and the exit
@@ -89,9 +90,7 @@ def main(argv: list[str] | None = None) -> int:
         CheckSpec(name=c["name"], kind=c["kind"], params=c.get("params", {}))
         for c in spec["checks"]
     ]
-    # "fuse": true -> aggregation-shaped checks share one scan (fused.py);
-    # non-fusable kinds run on the standard per-check path either way
-    results = suite.run_fused(checks) if spec.get("fuse") else suite.run(checks)
+    results = suite.run(checks)
     # with a checkpoint, the gate is every verdict recorded for the snapshot,
     # not just the partitions this run computed: a retried job that resumes
     # past a violated partition must still fail

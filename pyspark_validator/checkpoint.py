@@ -62,12 +62,6 @@ class CheckpointManager:
         except Exception:
             return self.spark.createDataFrame([], MANIFEST_SCHEMA)
 
-    def completed_partitions(self, check_id: str, snapshot_id: str) -> DataFrame:
-        done = self.recorded(snapshot_id, [check_id]).get(check_id, {})
-        return self.spark.createDataFrame(
-            [(p,) for p in sorted(done)], "partition_id int"
-        )
-
     def recorded(
         self, snapshot_id: str, check_ids: list[str]
     ) -> dict[str, dict[int, str]]:

@@ -40,6 +40,130 @@ def _aliased_keys(cols: list[str], prefix: str, null_mode: NullMode) -> list[Col
     ]
 
 
+def _g1_error() -> Column:
+    n = F.col("n_rows")
+    return F.when(n > 1, F.col("conflict_pairs") / (n * n - n)).otherwise(F.lit(0.0))
+
+
+def fd_x_level(xy_counts: DataFrame, x_cols: list[str], ycnt: str = "ycnt") -> DataFrame:
+    """Level-2 of an (X, Y)-level count frame, per distinct X (``x_cols``
+    lead with partition_id): cluster size cx, distinct-Y count, max Y
+    multiplicity, the within-cluster conflicting-ordered-pair count, and the
+    entropy partials (sum cxy ln cxy) feeding FI. Shared by FDCheck and
+    incremental.IncrementalFD."""
+    c = F.col(ycnt)
+    return xy_counts.groupBy(*x_cols).agg(
+        F.sum(c).alias("cx"),
+        F.count(F.lit(1)).alias("n_distinct_y"),
+        F.max(c).alias("max_y"),
+        F.sum(c * (c - 1)).alias("y_pairs"),
+        F.sum(c * F.log(c.cast("double"))).alias("y_ln_sum"),
+    )
+
+
+def fd_rollup(x_level: DataFrame) -> DataFrame:
+    """Per-partition verdicts from ``fd_x_level``: holds <=>
+    distinct(X)==distinct(X,Y) in the partition <=> no X-cluster with >1
+    distinct Y. Also carries the g1 numerator (conflicting ordered pairs)
+    and per-partition n for error assembly."""
+    viol = F.col("n_distinct_y") > 1
+    cx = F.col("cx")
+    return (
+        x_level.groupBy("partition_id")
+        .agg(
+            F.sum(cx).alias("n_rows"),
+            F.count(F.lit(1)).alias("n_distinct_x"),
+            F.sum("n_distinct_y").alias("n_distinct_xy"),
+            F.sum(viol.cast("long")).alias("n_error_clusters"),
+            F.sum(F.when(viol, cx).otherwise(0)).alias("n_error_rows"),
+            F.sum(cx * (cx - 1) - F.col("y_pairs")).alias("conflict_pairs"),
+        )
+        .withColumn("g1_error", _g1_error())
+        .withColumn("holds", F.col("n_error_clusters") == 0)
+    )
+
+
+def afd_rollup(
+    xy_counts: DataFrame, x_cols: list[str], y_cols: list[str], ycnt: str = "ycnt"
+) -> DataFrame:
+    """g1, g2, pdep, tau, mu+, rho, FI for X->Y (afd_measures.cpp:6-130), one
+    row, from an (X, Y)-level count frame. Shared by FDCheck and
+    incremental.IncrementalFD.
+
+    Closed forms over the (X,Y)-level count vector plus one extra pass over Y:
+      pdep(X->Y) = (1/n) sum_xy cxy^2/cx          pdep(Y) = sum_y cy^2 / n^2
+      tau  = (pdep_xy - pdep_y)/(1 - pdep_y)       (1 if pdep_y == 1)
+      mu+  = max(0, 1-(1-pdep_xy)/(1-pdep_y)*(n-1)/(n-K)), K = #distinct X
+      rho  = K / #distinct(X,Y)
+      g1   = (sum_x cx(cx-1) - sum_xy cxy(cxy-1)) / (n^2 - n)
+    """
+    x = fd_x_level(xy_counts, x_cols, ycnt).agg(
+        F.sum("cx").alias("n"),
+        F.count(F.lit(1)).alias("k_x"),
+        F.sum("n_distinct_y").alias("k_xy"),
+        F.sum(F.col("cx") * (F.col("cx") - 1) - F.col("y_pairs")).alias(
+            "conflict_pairs"
+        ),
+        # g2 numerator (afd_metric_calculator.cpp:71-87): rows inside
+        # X-clusters whose Y is not constant
+        F.sum(F.when(F.col("n_distinct_y") > 1, F.col("cx")).otherwise(0)).alias(
+            "g2_rows"
+        ),
+        # entropy partials for FI (afd_metric_calculator.cpp:180-211):
+        # H(Y|X) = -(1/n)[sum_xy cxy ln cxy - sum_x cx ln cx]
+        F.sum("y_ln_sum").alias("sum_cxy_ln"),
+        F.sum(F.col("cx") * F.log(F.col("cx").cast("double"))).alias("sum_cx_ln"),
+        # pdep numerator: sum_xy cxy^2/cx = sum_x (y_pairs + cx)/cx since
+        # sum_y cxy^2 = sum cxy(cxy-1) + sum cxy -- algebraic, so it folds
+        # into THIS agg instead of a second scan of the X-level lineage.
+        F.sum((F.col("y_pairs") + F.col("cx")) / F.col("cx")).alias("pdep_num"),
+    )
+    # Y marginal from the (X,Y)-level counts (cy = sum_x cxy): reuses the
+    # already-shuffled xy lineage instead of re-scanning the raw table.
+    y_level = (
+        xy_counts.groupBy(*y_cols)
+        .agg(F.sum(ycnt).alias("cy"))
+        .agg(
+            F.sum(F.col("cy") * F.col("cy")).alias("sum_cy2"),
+            F.sum(F.col("cy") * F.log(F.col("cy").cast("double"))).alias(
+                "sum_cy_ln"
+            ),
+            F.count(F.lit(1)).alias("k_y"),
+        )
+    )
+    j = x.crossJoin(y_level)
+    n = F.col("n").cast("double")
+    pdep_xy = F.col("pdep_num") / n
+    pdep_y = F.col("sum_cy2") / (n * n)
+    k_x = F.col("k_x").cast("double")
+    tau = F.when(pdep_y == 1.0, F.lit(1.0)).otherwise(
+        (pdep_xy - pdep_y) / (F.lit(1.0) - pdep_y)
+    )
+    mu = F.lit(1.0) - (F.lit(1.0) - pdep_xy) / (F.lit(1.0) - pdep_y) * (n - 1) / (
+        n - k_x
+    )
+    mu_plus = F.when((pdep_y == 1.0) | (k_x == n), F.lit(1.0)).otherwise(
+        F.greatest(F.lit(0.0), mu)
+    )
+    # FI = mutual information / H(Y); 0 when Y has < 2 distinct values
+    # (afd_metric_calculator.cpp:180-211). All terms use natural logs.
+    h_y = F.log(n) - F.col("sum_cy_ln") / n
+    h_y_given_x = -(F.col("sum_cxy_ln") - F.col("sum_cx_ln")) / n
+    fi = F.when(F.col("k_y") < 2, F.lit(0.0)).otherwise((h_y - h_y_given_x) / h_y)
+    return j.select(
+        (F.col("conflict_pairs") / (n * n - n)).alias("g1"),
+        (F.col("g2_rows") / n).alias("g2"),
+        pdep_xy.alias("pdep"),
+        tau.alias("tau"),
+        mu_plus.alias("mu_plus"),
+        (k_x / F.col("k_xy")).alias("rho"),
+        fi.alias("fi"),
+        F.col("n").alias("n_rows"),
+        F.col("k_x").alias("n_distinct_x"),
+        F.col("k_xy").alias("n_distinct_xy"),
+    )
+
+
 @dataclass
 class FDCheck:
     """Lazy FD / AFD / PFD check of lhs -> rhs over df."""
@@ -84,46 +208,14 @@ class FDCheck:
 
     @cached_property
     def _x_level(self) -> DataFrame:
-        """Level-2: per distinct X -- cluster size, distinct-Y count, max Y
-        multiplicity, the within-cluster conflicting-ordered-pair count, and
-        the entropy partials (sum cxy ln cxy) feeding FI."""
-        ycnt = F.col("ycnt")
-        return self._xy_counts.groupBy(
-            "partition_id", *[f"__x{i}" for i in range(len(self.lhs))]
-        ).agg(
-            F.sum(ycnt).alias("cx"),
-            F.count(F.lit(1)).alias("n_distinct_y"),
-            F.max(ycnt).alias("max_y"),
-            F.sum(ycnt * (ycnt - 1)).alias("y_pairs"),
-            F.sum(ycnt * F.log(ycnt.cast("double"))).alias("y_ln_sum"),
+        return fd_x_level(
+            self._xy_counts,
+            ["partition_id", *[f"__x{i}" for i in range(len(self.lhs))]],
         )
 
     def verdicts(self) -> DataFrame:
-        """Per-partition verdict: holds <=> distinct(X)==distinct(X,Y) in the
-        partition <=> no X-cluster with >1 distinct Y. Also carries the g1 numerator
-        (conflicting ordered pairs) and per-partition n for error assembly."""
-        viol = F.col("n_distinct_y") > 1
-        cx = F.col("cx")
-        return (
-            self._x_level.groupBy("partition_id")
-            .agg(
-                F.sum(cx).alias("n_rows"),
-                F.count(F.lit(1)).alias("n_distinct_x"),
-                F.sum("n_distinct_y").alias("n_distinct_xy"),
-                F.sum(viol.cast("long")).alias("n_error_clusters"),
-                F.sum(F.when(viol, cx).otherwise(0)).alias("n_error_rows"),
-                F.sum(cx * (cx - 1) - F.col("y_pairs")).alias("conflict_pairs"),
-            )
-            .withColumn(
-                "g1_error",
-                F.when(
-                    F.col("n_rows") > 1,
-                    F.col("conflict_pairs")
-                    / (F.col("n_rows") * F.col("n_rows") - F.col("n_rows")),
-                ).otherwise(F.lit(0.0)),
-            )
-            .withColumn("holds", F.col("n_error_clusters") == 0)
-        )
+        """Per-partition verdicts (``fd_rollup``)."""
+        return fd_rollup(self._x_level)
 
     def summary(self) -> DataFrame:
         """Global single-row verdict matching the reference getters
@@ -140,14 +232,7 @@ class FDCheck:
                 F.sum("n_error_rows").alias("n_error_rows"),
                 F.sum("conflict_pairs").alias("conflict_pairs"),
             )
-            .withColumn(
-                "g1_error",
-                F.when(
-                    F.col("n_rows") > 1,
-                    F.col("conflict_pairs")
-                    / (F.col("n_rows") * F.col("n_rows") - F.col("n_rows")),
-                ).otherwise(F.lit(0.0)),
-            )
+            .withColumn("g1_error", _g1_error())
         )
 
     def _lhs_sort_keys(self, prefix: str = "") -> list[Column]:
@@ -225,83 +310,11 @@ class FDCheck:
 
     # ----- AFD measure family ------------------------------------------------
     def afd_measures(self) -> DataFrame:
-        """g1, pdep, tau, mu+, rho for X->Y (afd_measures.cpp:6-130), one row.
-
-        Closed forms over the (X,Y)-level count vector plus one extra pass over Y:
-          pdep(X->Y) = (1/n) sum_xy cxy^2/cx          pdep(Y) = sum_y cy^2 / n^2
-          tau  = (pdep_xy - pdep_y)/(1 - pdep_y)       (1 if pdep_y == 1)
-          mu+  = max(0, 1-(1-pdep_xy)/(1-pdep_y)*(n-1)/(n-K)), K = #distinct X
-          rho  = K / #distinct(X,Y)
-          g1   = (sum_x cx(cx-1) - sum_xy cxy(cxy-1)) / (n^2 - n)
-        """
-        x = self._x_level.agg(
-            F.sum("cx").alias("n"),
-            F.count(F.lit(1)).alias("k_x"),
-            F.sum("n_distinct_y").alias("k_xy"),
-            F.sum(F.col("cx") * (F.col("cx") - 1) - F.col("y_pairs")).alias(
-                "conflict_pairs"
-            ),
-            # g2 numerator (afd_metric_calculator.cpp:71-87): rows inside
-            # X-clusters whose Y is not constant
-            F.sum(
-                F.when(F.col("n_distinct_y") > 1, F.col("cx")).otherwise(0)
-            ).alias("g2_rows"),
-            # entropy partials for FI (afd_metric_calculator.cpp:180-211):
-            # H(Y|X) = -(1/n)[sum_xy cxy ln cxy - sum_x cx ln cx]
-            F.sum("y_ln_sum").alias("sum_cxy_ln"),
-            F.sum(F.col("cx") * F.log(F.col("cx").cast("double"))).alias(
-                "sum_cx_ln"
-            ),
-            # pdep numerator: sum_xy cxy^2/cx = sum_x (y_pairs + cx)/cx since
-            # sum_y cxy^2 = sum cxy(cxy-1) + sum cxy -- algebraic, so it folds
-            # into THIS agg instead of a second scan of the X-level lineage.
-            F.sum((F.col("y_pairs") + F.col("cx")) / F.col("cx")).alias("pdep_num"),
-        )
-        # Y marginal from the (X,Y)-level counts (cy = sum_x cxy): reuses the
-        # already-shuffled xy lineage instead of re-scanning the raw table.
-        y_level = (
-            self._xy_counts.groupBy(*[f"__y{i}" for i in range(len(self.rhs))])
-            .agg(F.sum("ycnt").alias("cy"))
-            .agg(
-                F.sum(F.col("cy") * F.col("cy")).alias("sum_cy2"),
-                F.sum(F.col("cy") * F.log(F.col("cy").cast("double"))).alias(
-                    "sum_cy_ln"
-                ),
-                F.count(F.lit(1)).alias("k_y"),
-            )
-        )
-        j = x.crossJoin(y_level)
-        n = F.col("n").cast("double")
-        pdep_xy = F.col("pdep_num") / n
-        pdep_y = F.col("sum_cy2") / (n * n)
-        k_x = F.col("k_x").cast("double")
-        tau = F.when(pdep_y == 1.0, F.lit(1.0)).otherwise(
-            (pdep_xy - pdep_y) / (F.lit(1.0) - pdep_y)
-        )
-        mu = F.lit(1.0) - (F.lit(1.0) - pdep_xy) / (F.lit(1.0) - pdep_y) * (n - 1) / (
-            n - k_x
-        )
-        mu_plus = F.when((pdep_y == 1.0) | (k_x == n), F.lit(1.0)).otherwise(
-            F.greatest(F.lit(0.0), mu)
-        )
-        # FI = mutual information / H(Y); 0 when Y has < 2 distinct values
-        # (afd_metric_calculator.cpp:180-211). All terms use natural logs.
-        h_y = F.log(n) - F.col("sum_cy_ln") / n
-        h_y_given_x = -(F.col("sum_cxy_ln") - F.col("sum_cx_ln")) / n
-        fi = F.when(F.col("k_y") < 2, F.lit(0.0)).otherwise(
-            (h_y - h_y_given_x) / h_y
-        )
-        return j.select(
-            (F.col("conflict_pairs") / (n * n - n)).alias("g1"),
-            (F.col("g2_rows") / n).alias("g2"),
-            pdep_xy.alias("pdep"),
-            tau.alias("tau"),
-            mu_plus.alias("mu_plus"),
-            (k_x / F.col("k_xy")).alias("rho"),
-            fi.alias("fi"),
-            F.col("n").alias("n_rows"),
-            F.col("k_x").alias("n_distinct_x"),
-            F.col("k_xy").alias("n_distinct_xy"),
+        """g1, g2, pdep, tau, mu+, rho, FI for X->Y, one row (``afd_rollup``)."""
+        return afd_rollup(
+            self._xy_counts,
+            ["partition_id", *[f"__x{i}" for i in range(len(self.lhs))]],
+            [f"__y{i}" for i in range(len(self.rhs))],
         )
 
     def pfd_measures(self) -> DataFrame:

@@ -38,6 +38,39 @@ def _key_cols(
     ]
 
 
+def _aucc_error() -> Column:
+    n = F.col("n_rows")
+    return F.when(n > 1, F.col("violating_pairs") / (n * (n - F.lit(1)))).otherwise(
+        F.lit(0.0)
+    )
+
+
+def ucc_rollup(counts: DataFrame, cnt: str = "cnt") -> DataFrame:
+    """Per-partition UCC verdicts from a cluster-count frame
+    ``(partition_id, key..., <cnt>)``: [partition_id, n_rows, n_distinct,
+    n_violating_clusters, n_violating_rows, violating_pairs, aucc_error,
+    holds]. Shared by UCCCheck and incremental.IncrementalUCC.
+
+    ``violating_pairs`` = sum c*(c-1) (ordered pairs, reference numerator);
+    ``aucc_error`` uses the partition-local n. Algebraic aggs only =>
+    map-side partial aggregation => skew-immune.
+    """
+    c = F.col(cnt)
+    viol = c > 1
+    return (
+        counts.groupBy("partition_id")
+        .agg(
+            F.sum(c).alias("n_rows"),
+            F.count(F.lit(1)).alias("n_distinct"),
+            F.sum(viol.cast("long")).alias("n_violating_clusters"),
+            F.sum(F.when(viol, c).otherwise(0)).alias("n_violating_rows"),
+            F.sum(c * (c - 1)).alias("violating_pairs"),
+        )
+        .withColumn("aucc_error", _aucc_error())
+        .withColumn("holds", F.col("n_violating_clusters") == 0)
+    )
+
+
 @dataclass
 class UCCCheck:
     """Lazy UCC check over ``df`` on ``columns``.
@@ -88,35 +121,8 @@ class UCCCheck:
         )
 
     def verdicts(self) -> DataFrame:
-        """Per-partition verdict: [partition_id, n_rows, n_distinct,
-        n_violating_clusters, n_violating_rows, violating_pairs, aucc_error, holds].
-
-        ``violating_pairs`` = sum c*(c-1) (ordered pairs, reference numerator);
-        ``aucc_error`` uses the partition-local n. Algebraic aggs only =>
-        map-side partial aggregation => skew-immune.
-        """
-        cnt = F.col("cnt")
-        viol = cnt > 1
-        out = (
-            self.cluster_counts.groupBy("partition_id")
-            .agg(
-                F.sum(cnt).alias("n_rows"),
-                F.count(F.lit(1)).alias("n_distinct"),
-                F.sum(viol.cast("long")).alias("n_violating_clusters"),
-                F.sum(F.when(viol, cnt).otherwise(0)).alias("n_violating_rows"),
-                F.sum(cnt * (cnt - 1)).alias("violating_pairs"),
-            )
-            .withColumn(
-                "aucc_error",
-                F.when(
-                    F.col("n_rows") > 1,
-                    F.col("violating_pairs")
-                    / (F.col("n_rows") * (F.col("n_rows") - F.lit(1))),
-                ).otherwise(F.lit(0.0)),
-            )
-            .withColumn("holds", F.col("n_violating_clusters") == 0)
-        )
-        return out
+        """Per-partition verdicts from the cluster counts (``ucc_rollup``)."""
+        return ucc_rollup(self.cluster_counts)
 
     def summary(self) -> DataFrame:
         """Global verdict (single row), same fields as the reference's getters:
@@ -130,14 +136,7 @@ class UCCCheck:
             F.sum("n_violating_clusters").alias("n_violating_clusters"),
             F.sum("n_violating_rows").alias("n_violating_rows"),
             F.sum("violating_pairs").alias("violating_pairs"),
-        ).withColumn(
-            "aucc_error",
-            F.when(
-                F.col("n_rows") > 1,
-                F.col("violating_pairs")
-                / (F.col("n_rows") * (F.col("n_rows") - F.lit(1))),
-            ).otherwise(F.lit(0.0)),
-        )
+        ).withColumn("aucc_error", _aucc_error())
 
     def violations(self) -> DataFrame:
         """Violating clusters with a capped, deterministic row sample.

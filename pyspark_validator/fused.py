@@ -17,7 +17,9 @@ Fusable check families (each mirrors the semantics of its standalone module,
 which remains the single source of truth for the un-fused path):
 
 - ``nar``          -- NAR qualities per partition + CalcQualities-parity global
-                      rollup (checks/nar.py; reference nar/nar.cpp).
+                      rollup (checks/nar.py; reference nar/nar.cpp). API
+                      only: the suite runner's ``nar`` kind is one
+                      whole-table verdict, built standalone.
 - ``ac``           -- exception counts against a standing range list
                       (checks/ac.py exceptions(); reference ac_algorithm.h:19-33).
 - ``row_predicate``-- "no row violates <conditions>" in the NAR condition form.
@@ -43,8 +45,9 @@ by partition_id -- their shuffle is the computation and cannot share this pass
 (``distinct`` above is the approximate escape hatch);
 SD/OC need total order; MFD/DD/DC are pairwise. Those stay standalone jobs.
 
-Checkpoint/resume composes: the runner scans only partitions pending for at
-least one fused check and post-filters each check's verdicts to its own
+The suite runner fuses a check when its ``runner.KINDS`` entry has a fused
+builder. Checkpoint/resume composes: the runner scans only partitions pending
+for at least one fused check and post-filters each check's verdicts to its own
 pending set (runner.py), so resume semantics are identical to the per-check
 path while preserving the one-scan property.
 """
@@ -1067,124 +1070,3 @@ class IncrementalFused:
     ) -> dict[str, DataFrame]:
         g = self.grouped(partition_ids)
         return {n: m.finish(g) for n, m in self.fp._members.items()}
-
-
-FUSABLE_KINDS = frozenset(
-    {"nar", "ac", "row_predicate", "completeness", "numeric_profile",
-     "histogram_drift", "distinct", "type_conformance", "span_integrity",
-     "pii_budget", "benford", "class_balance", "token_budget",
-     "media_context", "interleaved_quality"}
-)
-
-
-def member_from_spec(p: FusedPass, name: str, kind: str, params: dict) -> bool:
-    """Route a runner CheckSpec into the fused pass. Returns False when the
-    spec is of a fusable kind but its params force the standalone path (e.g.
-    an AC check without a standing range list must first DISCOVER its ranges,
-    which is the clustering job in checks/ac.py).
-
-    FUSABLE_KINDS is the single source of truth: kinds outside it short-circuit
-    here, and tests/test_fused.py pins that every member of the set routes."""
-    if kind not in FUSABLE_KINDS:
-        return False
-    if kind == "nar":
-        p.add_nar(
-            name,
-            params["ante"],
-            params["cons"],
-            min_confidence=params.get("min_confidence", 1.0),
-            feature_count=params.get("feature_count"),
-        )
-    elif kind == "ac":
-        if params.get("ranges") is None:
-            return False
-        p.add_ac(
-            name,
-            params["lhs"],
-            params["rhs"],
-            params.get("binop", "+"),
-            [tuple(r) for r in params["ranges"]],
-        )
-    elif kind == "row_predicate":
-        p.add_row_predicate(name, params["conditions"])
-    elif kind == "completeness":
-        p.add_completeness(
-            name, params["column"], params.get("max_null_fraction", 0.0)
-        )
-    elif kind == "numeric_profile":
-        p.add_numeric_profile(name, params["column"])
-    elif kind == "distinct":
-        p.add_distinct(
-            name,
-            params["columns"],
-            min_ratio=params.get("min_ratio"),
-            lg_k=params.get("lg_k", 12),
-        )
-    elif kind == "type_conformance":
-        p.add_type_conformance(
-            name,
-            params["column"],
-            params["dtype"],
-            max_violation_fraction=params.get("max_violation_fraction", 0.0),
-        )
-    elif kind == "span_integrity":
-        p.add_span_integrity(
-            name,
-            spans_col=params.get("spans_col", "spans"),
-            kinds=params.get("kinds"),
-        )
-    elif kind == "interleaved_quality":
-        p.add_interleaved_quality(
-            name,
-            spans_col=params.get("spans_col", "spans"),
-            max_media=params.get("max_media", 32),
-            max_media_run=params.get("max_media_run", 3),
-            min_text_tokens=params.get("min_text_tokens", 8),
-            max_flagged_fraction=params.get("max_flagged_fraction", 0.0),
-        )
-    elif kind == "media_context":
-        p.add_media_context(
-            name,
-            spans_col=params.get("spans_col", "spans"),
-            min_caption_ratio=params.get("min_caption_ratio"),
-        )
-    elif kind == "token_budget":
-        p.add_token_budget(
-            name,
-            spans_col=params.get("spans_col", "spans"),
-            media_token_cost=params.get("media_token_cost", 256),
-            max_tokens=params.get("max_tokens"),
-        )
-    elif kind == "pii_budget":
-        p.add_pii_budget(
-            name,
-            text_col=params.get("text_col", "text"),
-            max_doc_fraction=params.get("max_doc_fraction", 0.0),
-            kinds=params.get("kinds"),
-        )
-    elif kind == "benford":
-        p.add_benford(
-            name,
-            params["column"],
-            mad_gate=params.get("mad_gate", "acceptable"),
-        )
-    elif kind == "class_balance":
-        p.add_class_balance(
-            name,
-            params["column"],
-            dict(params["expected"]),
-            max_psi=params.get("max_psi", 0.1),
-            alpha=params.get("alpha", 0.5),
-        )
-    elif kind == "histogram_drift":
-        p.add_histogram_drift(
-            name,
-            params["column"],
-            [float(e) for e in params["bin_edges"]],
-            [float(q) for q in params["baseline_probs"]],
-            max_psi=params.get("max_psi", 0.1),
-            alpha=params.get("alpha", 0.5),
-        )
-    else:
-        return False
-    return True

@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_validator.canonical import partition_id_expr
+from pyspark_validator.checks.fd import afd_rollup, fd_rollup, fd_x_level
+from pyspark_validator.checks.ucc import ucc_rollup
 
 
 class _IncrementalState:
@@ -204,34 +206,40 @@ class _IncrementalState:
         )
 
 
-class IncrementalUCC:
-    """Dynamic UCC: maintain per-key cluster counts; verdicts from state only."""
+class _IncrementalCounts:
+    """Per-key count state ``(partition_id, key..., <cnt>)`` under delta
+    batches, shared by IncrementalUCC and IncrementalFD. ``partition_cols``
+    decide the logical partition, ``key_cols`` the counted key."""
+
+    cnt = "cnt"
 
     def __init__(
         self,
         spark: SparkSession,
         state_path: str,
-        columns: list[str],
-        num_partitions: int = 64,
+        partition_cols: list[str],
+        key_cols: list[str],
+        num_partitions: int,
     ):
         self.spark = spark
-        self.columns = list(columns)
         self.num_partitions = num_partitions
         self.state = _IncrementalState(spark, state_path)
+        self._pcols = partition_cols
+        self._kcols = key_cols
 
     def _keyed(self, df: DataFrame) -> DataFrame:
         return df.select(
             partition_id_expr(
-                F.struct(*[F.col(c) for c in self.columns]), self.num_partitions
+                F.struct(*[F.col(c) for c in self._pcols]), self.num_partitions
             ).alias("partition_id"),
-            *[F.col(c) for c in self.columns],
+            *[F.col(c) for c in self._kcols],
         )
 
     def initialize(self, df: DataFrame) -> int:
         counts = (
             self._keyed(df)
-            .groupBy("partition_id", *self.columns)
-            .agg(F.count(F.lit(1)).alias("cnt"))
+            .groupBy("partition_id", *self._kcols)
+            .agg(F.count(F.lit(1)).alias(self.cnt))
         )
         return self.state.write_full(counts)
 
@@ -252,7 +260,7 @@ class IncrementalUCC:
         delta = parts[0]
         for p in parts[1:]:
             delta = delta.unionByName(p)
-        dcounts = delta.groupBy("partition_id", *self.columns).agg(
+        dcounts = delta.groupBy("partition_id", *self._kcols).agg(
             F.sum("d").alias("dcnt")
         )
         touched = [
@@ -263,51 +271,48 @@ class IncrementalUCC:
         # untouched partitions are never read -- write_delta carries their
         # files by reference in the new manifest.
         hot = self.state.read(partition_ids=touched)
-        on = ["partition_id", *self.columns]
+        on = ["partition_id", *self._kcols]
         merged = (
             hot.join(dcounts, on=on, how="full_outer")
             .select(
                 *on,
                 (
-                    F.coalesce(F.col("cnt"), F.lit(0))
+                    F.coalesce(F.col(self.cnt), F.lit(0))
                     + F.coalesce(F.col("dcnt"), F.lit(0))
-                ).alias("cnt"),
+                ).alias(self.cnt),
             )
-            .filter(F.col("cnt") > 0)
+            .filter(F.col(self.cnt) > 0)
         )
         self.state.write_delta(merged, touched)
         return self.verdicts(partition_ids=touched)
 
+
+class IncrementalUCC(_IncrementalCounts):
+    """Dynamic UCC: maintain per-key cluster counts; verdicts from state only."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        state_path: str,
+        columns: list[str],
+        num_partitions: int = 64,
+    ):
+        self.columns = list(columns)
+        super().__init__(
+            spark, state_path, self.columns, self.columns, num_partitions
+        )
+
     def verdicts(self, partition_ids: list[int] | None = None) -> DataFrame:
         """Per-partition UCC verdicts derived purely from state (same fields as
         UCCCheck.verdicts)."""
-        s = self.state.read(partition_ids=partition_ids)
-        cnt = F.col("cnt")
-        viol = cnt > 1
-        return (
-            s.groupBy("partition_id")
-            .agg(
-                F.sum(cnt).alias("n_rows"),
-                F.count(F.lit(1)).alias("n_distinct"),
-                F.sum(viol.cast("long")).alias("n_violating_clusters"),
-                F.sum(F.when(viol, cnt).otherwise(0)).alias("n_violating_rows"),
-                F.sum(cnt * (cnt - 1)).alias("violating_pairs"),
-            )
-            .withColumn(
-                "aucc_error",
-                F.when(
-                    F.col("n_rows") > 1,
-                    F.col("violating_pairs")
-                    / (F.col("n_rows") * (F.col("n_rows") - F.lit(1))),
-                ).otherwise(F.lit(0.0)),
-            )
-            .withColumn("holds", F.col("n_violating_clusters") == 0)
-        )
+        return ucc_rollup(self.state.read(partition_ids=partition_ids))
 
 
-class IncrementalFD:
+class IncrementalFD(_IncrementalCounts):
     """Dynamic FD: maintain (X, Y)-level counts; verdicts from state only
     (DynamicFDVerifier analog: only touched X-groups are re-judged)."""
+
+    cnt = "ycnt"
 
     def __init__(
         self,
@@ -317,69 +322,12 @@ class IncrementalFD:
         rhs: list[str],
         num_partitions: int = 64,
     ):
-        self.spark = spark
         self.lhs = list(lhs)
         self.rhs = list(rhs)
-        self.num_partitions = num_partitions
-        self.state = _IncrementalState(spark, state_path)
-
-    @property
-    def _cols(self) -> list[str]:
         # rhs may overlap lhs (the reference permits e.g. {0,1} -> {1,4});
         # select/group on the unique union
-        return list(dict.fromkeys(self.lhs + self.rhs))
-
-    def _keyed(self, df: DataFrame) -> DataFrame:
-        return df.select(
-            partition_id_expr(
-                F.struct(*[F.col(c) for c in self.lhs]), self.num_partitions
-            ).alias("partition_id"),
-            *[F.col(c) for c in self._cols],
-        )
-
-    def initialize(self, df: DataFrame) -> int:
-        counts = (
-            self._keyed(df)
-            .groupBy("partition_id", *self._cols)
-            .agg(F.count(F.lit(1)).alias("ycnt"))
-        )
-        return self.state.write_full(counts)
-
-    def apply_delta(
-        self, inserts: DataFrame | None = None, deletes: DataFrame | None = None
-    ) -> DataFrame:
-        parts = []
-        if inserts is not None:
-            parts.append(self._keyed(inserts).withColumn("d", F.lit(1)))
-        if deletes is not None:
-            parts.append(self._keyed(deletes).withColumn("d", F.lit(-1)))
-        if not parts:
-            raise ValueError("apply_delta needs inserts and/or deletes")
-        delta = parts[0]
-        for p in parts[1:]:
-            delta = delta.unionByName(p)
-        dcounts = delta.groupBy("partition_id", *self._cols).agg(
-            F.sum("d").alias("dcnt")
-        )
-        touched = [
-            r.partition_id
-            for r in dcounts.select("partition_id").distinct().collect()
-        ]
-        hot = self.state.read(partition_ids=touched)
-        on = ["partition_id", *self._cols]
-        merged = (
-            hot.join(dcounts, on=on, how="full_outer")
-            .select(
-                *on,
-                (
-                    F.coalesce(F.col("ycnt"), F.lit(0))
-                    + F.coalesce(F.col("dcnt"), F.lit(0))
-                ).alias("ycnt"),
-            )
-            .filter(F.col("ycnt") > 0)
-        )
-        self.state.write_delta(merged, touched)
-        return self.verdicts(partition_ids=touched)
+        cols = list(dict.fromkeys(self.lhs + self.rhs))
+        super().__init__(spark, state_path, self.lhs, cols, num_partitions)
 
     def afd_measures(self) -> DataFrame:
         """g1 / pdep / tau / mu+ / rho recomputed from the count state after any
@@ -387,103 +335,9 @@ class IncrementalFD:
         dynamic_verifying_afd example re-reads measures after each batch).
         All marginals derive from the stored (X, Y)-level counts -- no rescan
         of the data."""
-        s = self.state.read()
-        ycnt = F.col("ycnt")
-        x_level = s.groupBy(*self.lhs).agg(
-            F.sum(ycnt).alias("cx"),
-            F.count(F.lit(1)).alias("n_distinct_y"),
-            F.sum(ycnt * (ycnt - 1)).alias("y_pairs"),
-            F.sum(ycnt * F.log(ycnt.cast("double"))).alias("y_ln_sum"),
-        )
-        x = x_level.agg(
-            F.sum("cx").alias("n"),
-            F.count(F.lit(1)).alias("k_x"),
-            F.sum("n_distinct_y").alias("k_xy"),
-            F.sum(F.col("cx") * (F.col("cx") - 1) - F.col("y_pairs")).alias(
-                "conflict_pairs"
-            ),
-            F.sum(
-                F.when(F.col("n_distinct_y") > 1, F.col("cx")).otherwise(0)
-            ).alias("g2_rows"),
-            F.sum("y_ln_sum").alias("sum_cxy_ln"),
-            F.sum(F.col("cx") * F.log(F.col("cx").cast("double"))).alias(
-                "sum_cx_ln"
-            ),
-        )
-        pdep_num = x_level.agg(
-            F.sum((F.col("y_pairs") + F.col("cx")) / F.col("cx")).alias("pdep_num")
-        )
-        y_level = (
-            s.groupBy(*self.rhs)
-            .agg(F.sum(ycnt).alias("cy"))
-            .agg(
-                F.sum(F.col("cy") * F.col("cy")).alias("sum_cy2"),
-                F.sum(F.col("cy") * F.log(F.col("cy").cast("double"))).alias(
-                    "sum_cy_ln"
-                ),
-                F.count(F.lit(1)).alias("k_y"),
-            )
-        )
-        j = x.crossJoin(pdep_num).crossJoin(y_level)
-        n = F.col("n").cast("double")
-        pdep_xy = F.col("pdep_num") / n
-        pdep_y = F.col("sum_cy2") / (n * n)
-        k_x = F.col("k_x").cast("double")
-        tau = F.when(pdep_y == 1.0, F.lit(1.0)).otherwise(
-            (pdep_xy - pdep_y) / (F.lit(1.0) - pdep_y)
-        )
-        mu = F.lit(1.0) - (F.lit(1.0) - pdep_xy) / (F.lit(1.0) - pdep_y) * (n - 1) / (
-            n - k_x
-        )
-        mu_plus = F.when((pdep_y == 1.0) | (k_x == n), F.lit(1.0)).otherwise(
-            F.greatest(F.lit(0.0), mu)
-        )
-        h_y = F.log(n) - F.col("sum_cy_ln") / n
-        h_y_given_x = -(F.col("sum_cxy_ln") - F.col("sum_cx_ln")) / n
-        fi = F.when(F.col("k_y") < 2, F.lit(0.0)).otherwise(
-            (h_y - h_y_given_x) / h_y
-        )
-        return j.select(
-            (F.col("conflict_pairs") / (n * n - n)).alias("g1"),
-            (F.col("g2_rows") / n).alias("g2"),
-            pdep_xy.alias("pdep"),
-            tau.alias("tau"),
-            mu_plus.alias("mu_plus"),
-            (k_x / F.col("k_xy")).alias("rho"),
-            fi.alias("fi"),
-            F.col("n").alias("n_rows"),
-            F.col("k_x").alias("n_distinct_x"),
-            F.col("k_xy").alias("n_distinct_xy"),
-        )
+        return afd_rollup(self.state.read(), ["partition_id", *self.lhs], self.rhs)
 
     def verdicts(self, partition_ids: list[int] | None = None) -> DataFrame:
         """Per-partition FD verdicts from state (same fields as FDCheck.verdicts)."""
         s = self.state.read(partition_ids=partition_ids)
-        ycnt = F.col("ycnt")
-        x_level = s.groupBy("partition_id", *self.lhs).agg(
-            F.sum(ycnt).alias("cx"),
-            F.count(F.lit(1)).alias("n_distinct_y"),
-            F.sum(ycnt * (ycnt - 1)).alias("y_pairs"),
-        )
-        viol = F.col("n_distinct_y") > 1
-        cx = F.col("cx")
-        return (
-            x_level.groupBy("partition_id")
-            .agg(
-                F.sum(cx).alias("n_rows"),
-                F.count(F.lit(1)).alias("n_distinct_x"),
-                F.sum("n_distinct_y").alias("n_distinct_xy"),
-                F.sum(viol.cast("long")).alias("n_error_clusters"),
-                F.sum(F.when(viol, cx).otherwise(0)).alias("n_error_rows"),
-                F.sum(cx * (cx - 1) - F.col("y_pairs")).alias("conflict_pairs"),
-            )
-            .withColumn(
-                "g1_error",
-                F.when(
-                    F.col("n_rows") > 1,
-                    F.col("conflict_pairs")
-                    / (F.col("n_rows") * F.col("n_rows") - F.col("n_rows")),
-                ).otherwise(F.lit(0.0)),
-            )
-            .withColumn("holds", F.col("n_error_clusters") == 0)
-        )
+        return fd_rollup(fd_x_level(s, ["partition_id", *self.lhs]))

@@ -417,7 +417,7 @@ def test_concurrent_suite_runs_union_without_clobbering(spark, tmp_path):
         for bd in batches for f in os.listdir(bd)
     )
     # union: all 5 partitions completed; the overlap kept BOTH facts
-    assert a.completed_partitions("c1", "s1").count() == 5
+    assert set(a.recorded("s1", ["c1"])["c1"]) == set(range(5))
     assert b.manifest().count() == 6
     # last-wins: partition 2's latest record (run_b, violated) decides
     hist = {
@@ -603,11 +603,12 @@ def test_fused_pass_on_fresh_checkpoint_has_no_join(spark, tmp_path, monkeypatch
 
 
 def test_whole_table_kinds_match_verdict_framing(spark):
-    """``_WHOLE_TABLE_KINDS`` must name exactly the kinds whose verdicts are
-    all partition 0: a whole-table kind left out would get the universe
-    range(P), never complete, and be recomputed on every rerun."""
+    """The registry's ``whole_table`` flag must name exactly the kinds whose
+    verdicts are all partition 0, through either entry point: a whole-table
+    kind flagged per-partition would get the universe range(P), never
+    complete, and be recomputed on every rerun."""
     from pyspark_validator.checks.md import ColumnMatch
-    from pyspark_validator.runner import _FUSED_ONLY_KINDS, _WHOLE_TABLE_KINDS
+    from pyspark_validator.runner import KINDS
 
     docs = spark.range(64).select(
         F.concat(F.lit("d"), F.col("id").cast("string")).alias("doc_id"),
@@ -647,19 +648,120 @@ def test_whole_table_kinds_match_verdict_framing(spark):
         "anon": {"quasi_identifiers": ["grp"], "k": 2},
         "completeness": {"column": "doc_id"},
     }
-    assert set(whole) == _WHOLE_TABLE_KINDS
-    assert not _FUSED_ONLY_KINDS & _WHOLE_TABLE_KINDS
-    suite = ValidationSuite(spark, docs, num_partitions=4)
+    assert set(whole) == {k for k, v in KINDS.items() if v.whole_table}
     specs = [
         CheckSpec(name=k, kind=k, params=p)
         for k, p in {**whole, **per_partition}.items()
     ]
-    got = {
-        name: {r.partition_id for r in v.select("partition_id").collect()}
-        for name, v in suite.run(specs).items()
-    }
-    for k in whole:
-        assert got[k] == {0}, k
-    for k in per_partition:
-        assert len(got[k]) > 1, k
+    specs += [
+        # ac that discovers its ranges, and ac keyed by another column:
+        # both standalone, still per-partition
+        CheckSpec(name="ac_disc", kind="ac",
+                  params={"lhs": "b", "rhs": "a", "binop": "-"}),
+        CheckSpec(name="ac_grp", kind="ac",
+                  params={"lhs": "b", "rhs": "a", "binop": "-",
+                          "ranges": [[0.0, 9.0]], "partition_key": "grp"}),
+        CheckSpec(name="custom", kind="custom",
+                  fn=lambda df: df.select("partition_id", F.lit(True).alias("holds"))
+                  .distinct()),
+    ]
+    for entry in ("run", "run_fused"):
+        suite = ValidationSuite(spark, docs, num_partitions=4)
+        got = {
+            name: {r.partition_id for r in v.select("partition_id").collect()}
+            for name, v in getattr(suite, entry)(specs).items()
+        }
+        for k in whole:
+            assert got[k] == {0}, (entry, k)
+        for k in [*per_partition, "ac_disc", "ac_grp", "custom"]:
+            assert len(got[k]) > 1, (entry, k)
+        suite.unpersist()
+
+
+def _mode_parity_docs(spark):
+    return spark.range(200).select(
+        F.concat(F.lit("d"), F.col("id").cast("string")).alias("doc_id"),
+        F.when(F.col("id") % 4 == 0, "F").otherwise("G").alias("status"),
+        F.concat(F.lit("g"), (F.col("id") % 3).cast("string")).alias("grp"),
+        (F.col("id") % 10).cast("double").alias("a"),
+        (F.col("id") % 7).cast("double").alias("b"),
+    )
+
+
+@pytest.mark.parametrize(
+    "spec_kw",
+    [
+        {"kind": "nar", "params": {"ante": {"status": {"in": ["F"]}},
+                                   "cons": {"a": {"between": [0.0, 4.0]}},
+                                   "min_confidence": 0.5}},
+        {"kind": "ac", "params": {"lhs": "a", "rhs": "b", "binop": "-",
+                                  "ranges": [[-6.0, 6.0]]}},
+        {"kind": "ac", "params": {"lhs": "a", "rhs": "b", "binop": "-",
+                                  "ranges": [[-6.0, 6.0]], "partition_key": "grp"}},
+    ],
+    ids=["nar", "ac_ranges", "ac_ranges_grp"],
+)
+def test_run_and_run_fused_record_one_manifest(spark, tmp_path, spec_kw):
+    """A kind has one scope and one verdict schema whatever the entry point:
+    ``run`` then ``run_fused`` on one checkpoint, and the reverse, leave the
+    same (partition_id, status, metrics_json) set as a single-mode run."""
+    docs = _mode_parity_docs(spark)
+    spec = CheckSpec(name="chk", **spec_kw)
+
+    def manifest(path, entries):
+        for entry in entries:
+            suite = ValidationSuite(
+                spark, docs, num_partitions=8, checkpoint_path=path, snapshot_id="s"
+            )
+            getattr(suite, entry)([spec])
+            suite.unpersist()
+        rows = CheckpointManager(spark, path).manifest().collect()
+        return {(r.partition_id, r.status, r.metrics_json) for r in rows}
+
+    single = manifest(str(tmp_path / "single"), ["run"])
+    assert single
+    assert manifest(str(tmp_path / "fwd"), ["run", "run_fused"]) == single
+    assert manifest(str(tmp_path / "rev"), ["run_fused", "run"]) == single
+    assert manifest(str(tmp_path / "fused"), ["run_fused"]) == single
+
+
+def test_unknown_kind_fails_before_any_spark_work(spark, tmp_path):
+    """Every kind is looked up before a check runs: a typo in the last spec
+    must not leave the earlier checks' manifest batches behind."""
+    path = str(tmp_path / "m")
+    suite = ValidationSuite(
+        spark, fixtures.docs_spark_df(spark, 100), num_partitions=4,
+        checkpoint_path=path,
+    )
+    checks = [
+        CheckSpec(name="ucc_doc_id", kind="ucc", params={"columns": ["doc_id"]}),
+        CheckSpec(name="typo", kind="uccc"),
+    ]
+    with pytest.raises(ValueError, match=r"uccc.*known kinds: .*\bucc\b"):
+        suite.run(checks)
+    assert _batches(path) == []
     suite.unpersist()
+
+
+def test_unpersist_releases_the_runs_fused_pass(spark):
+    """The shared FusedPass persists its grouped frame; ``unpersist`` must
+    drop it along with the canonical cache. (Persisted RDDs of earlier tests
+    may be cleaned meanwhile, so the check is on this run's own RDD ids.)"""
+    sc = spark.sparkContext
+
+    def persisted() -> set[int]:
+        return set(sc._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    suite = ValidationSuite(spark, fixtures.docs_spark_df(spark, 100), num_partitions=4)
+    out = suite.run(
+        [
+            CheckSpec(name="spans_ok", kind="span_integrity"),
+            CheckSpec(name="n_ok", kind="completeness", params={"column": "doc_id"}),
+        ]
+    )
+    assert all(v.count() == 4 for v in out.values())
+    ours = persisted() - before
+    assert len(ours) == 2  # the canonical frame and the fused pass
+    suite.unpersist()
+    assert not ours & persisted()

@@ -217,9 +217,11 @@ def test_fused_plan_all_algebraic_single_scan(spark, orders):
 
 
 def test_run_fused_matches_run_and_resumes(spark, orders, tmp_path):
-    """runner.run_fused: fused verdicts agree with the per-check path's
-    global answers, the manifest records per-partition lineage, and a resumed
-    run recomputes nothing."""
+    """runner.run_fused: nar keeps its whole-table verdict (partition 0,
+    equal to NARCheck.qualities() on the suite frame), fused kinds record
+    per-partition lineage, and a resumed run recomputes nothing."""
+    from pyspark_validator.checks.nar import nar_check
+
     checks = [
         CheckSpec(
             name="nar_f",
@@ -249,7 +251,14 @@ def test_run_fused_matches_run_and_resumes(spark, orders, tmp_path):
     res = suite.run_fused(checks)
     assert set(res) == {"nar_f", "comp_prio", "ucc_key"}
     nar_rows = res["nar_f"].collect()
-    assert len(nar_rows) == 8 and all(r.holds for r in nar_rows)
+    want = nar_check(
+        suite.canon.df, checks[0].params["ante"], checks[0].params["cons"]
+    ).qualities().collect()[0]
+    assert len(nar_rows) == 1 and nar_rows[0].partition_id == 0
+    assert nar_rows[0].holds and want.confidence == 1.0
+    for field_name, value in want.asDict().items():
+        assert getattr(nar_rows[0], field_name) == pytest.approx(value), field_name
+    assert res["comp_prio"].count() == 8
     assert all(r.holds for r in res["comp_prio"].collect())
     # resume: all partitions recorded -> second run computes zero rows
     suite2 = ValidationSuite(
@@ -345,12 +354,16 @@ def test_incremental_fused_equals_batch(spark, orders, tmp_path):
 
 
 def test_cli_fuse_flag(spark, tmp_path, capsys):
+    """A spec that still carries the retired "fuse" key runs unchanged."""
     from pyspark_validator.__main__ import main
+    from pyspark_validator.canonical import canonicalize
+    from pyspark_validator.checks.nar import nar_check
 
     spec = {
         "table": "/root/testdata/sf0.001/orders.parquet",
         "num_partitions": 4,
         "doc_id_col": "o_orderkey",
+        "output": f"{tmp_path}/out",
         "fuse": True,
         "checks": [
             {
@@ -375,8 +388,20 @@ def test_cli_fuse_flag(spark, tmp_path, capsys):
         json.loads(l)["check"]: json.loads(l)
         for l in capsys.readouterr().out.strip().splitlines()
     }
-    assert out["nar_f"]["holds"] and out["nar_f"]["partitions"] == 4
+    # nar is whole-table whatever the spec says about fusing: one verdict,
+    # equal to NARCheck.qualities() on the frame the suite validates
+    assert out["nar_f"]["holds"] and out["nar_f"]["partitions"] == 1
     assert out["prof_price"]["partitions"] == 4
+    (got,) = spark.read.parquet(f"{tmp_path}/out/nar_f").collect()
+    canon = canonicalize(
+        spark.read.parquet(spec["table"]), num_partitions=4, doc_id_col="o_orderkey"
+    )
+    rule = spec["checks"][0]["params"]
+    (want,) = nar_check(canon.df, rule["ante"], rule["cons"]).qualities().collect()
+    canon.unpersist()
+    assert got.partition_id == 0 and got.holds
+    for field_name, value in want.asDict().items():
+        assert getattr(got, field_name) == pytest.approx(value), field_name
 
 
 def test_fused_distinct_tracks_exact_counts(spark, orders, fused):
@@ -900,13 +925,13 @@ def test_runner_interleaved_quality_kind_standalone(spark):
     assert sum(0 if r.holds else 1 for r in v) == 1
 
 
-def test_fusable_kinds_matches_member_from_spec_routing(spark):
-    """FUSABLE_KINDS is the single source of truth for which runner kinds
-    fuse: every member of the set must route through member_from_spec (with
-    minimally-valid params), and kinds outside the set must return False.
-    Pins the set against routing drift (round-2 bug: 5 routed kinds were
+def test_fusable_kinds_route_through_the_registry(spark):
+    """runner.KINDS is the single source of truth for which kinds fuse:
+    every entry with a fused builder must register one FusedPass member from
+    minimally-valid params, and every other kind has no fused builder. Pins
+    the fusable set against routing drift (round-2 bug: 5 routed kinds were
     missing from the exported frozenset)."""
-    from pyspark_validator.fused import FUSABLE_KINDS, FusedPass, member_from_spec
+    from pyspark_validator.runner import KINDS
 
     schema = (
         "doc_id string, text string, grp string, val double, "
@@ -918,7 +943,6 @@ def test_fusable_kinds_matches_member_from_spec_routing(spark):
         schema,
     )
     minimal_params = {
-        "nar": {"ante": {"grp": ["a"]}, "cons": {"val": (0.0, 100.0)}},
         "ac": {"lhs": "val", "rhs": "val", "ranges": [(0.0, 100.0)]},
         "row_predicate": {"conditions": {"grp": ["a"]}},
         "completeness": {"column": "text"},
@@ -938,11 +962,25 @@ def test_fusable_kinds_matches_member_from_spec_routing(spark):
             "baseline_probs": [0.5, 0.5],
         },
     }
-    assert set(minimal_params) == set(FUSABLE_KINDS)
+    assert set(minimal_params) == {k for k, v in KINDS.items() if v.fuse is not None}
     for kind, params in minimal_params.items():
         fp = FusedPass(df, num_partitions=2, partition_key="doc_id")
-        assert member_from_spec(fp, f"m_{kind}", kind, params), kind
-    fp = FusedPass(df, num_partitions=2, partition_key="doc_id")
-    assert not member_from_spec(fp, "nope", "ucc", {"columns": ["doc_id"]})
-    # fusable kind whose params force the standalone path still returns False
-    assert not member_from_spec(fp, "ac_disc", "ac", {"lhs": "val", "rhs": "val"})
+        assert KINDS[kind].fuses(params), kind
+        KINDS[kind].fuse(fp, f"m_{kind}", **params)
+        assert list(fp._members) == [f"m_{kind}"], kind
+    # every kind is buildable one way or the other; fused-only kinds are
+    # per-partition and always fuse
+    for kind, entry in KINDS.items():
+        assert entry.build is not None or entry.fuse is not None, kind
+        if entry.build is None:
+            assert not entry.whole_table and entry.fuses({}), kind
+    # nar is one whole-table verdict, never a per-partition fused member
+    assert KINDS["nar"].whole_table and KINDS["nar"].fuse is None
+    assert KINDS["ucc"].fuse is None
+    # ac without a standing range list must first DISCOVER its ranges, and
+    # ac keyed by another column reports that column's partitions: neither
+    # fuses
+    ac = minimal_params["ac"]
+    assert not KINDS["ac"].fuses({"lhs": "val", "rhs": "val"})
+    assert not KINDS["ac"].fuses({**ac, "partition_key": "grp"})
+    assert KINDS["ac"].fuses({**ac, "partition_key": "doc_id"})
