@@ -3194,7 +3194,7 @@ FROM tot, miss
 
 def q_sketch_profile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-pass multi-column sketch profile (sketches.sketch_profile: HLL +
-    CMS + KLL for every column in ONE scan + bounded-fan-in tree merge). The
+    CMS + KLL for every column in ONE scan and one JVM aggregation). The
     oracle checks the exact parts (row/null counts) plus the HLL estimate
     bounded against the true distinct count (rel err << the 2.5% envelope at
     p=12, asserted here as a boolean so the check is deterministic)."""
@@ -3209,7 +3209,7 @@ def q_sketch_profile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .repartition(8)  # single-file parquet: parallelize the one pass
     )
-    prof = sketch_profile(li, cols, fanin=8)
+    prof = sketch_profile(li, cols)
     exact_row = li.agg(
         *[F.countDistinct(c).alias(c) for c in cols]
     ).collect()[0]

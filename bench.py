@@ -95,9 +95,9 @@ HEADLINE = [
     "span_integrity_planted",
     "type_conformance_lang",
     "media_ref_integrity_planted",
-    # one-pass HLL+CMS+KLL profile (9s at sf0.1 is the PYTHON sketch-update
-    # cost for 600k rows x 3 cols in ONE scan -- the separate builders would
-    # pay ~3 scans per column) + real-codec payload conformance
+    # one-pass HLL+CMS+KLL profile (one native aggregation for 3 cols in ONE
+    # scan -- the separate builders would pay ~3 scans per column) +
+    # real-codec payload conformance
     "sketch_profile_lineitem",
     "media_conformance_planted",
     # round 2 session 5: AOD removal-set witness rows (union semantics) +

@@ -38,8 +38,9 @@ Check kinds (runner.KINDS):
   whole table (one verdict, partition 0): nd sfd nar mfd sd md assoc
     reconcile precedence interval_overlap outlier, schema (metadata-only
     expected-vs-actual StructType diff, params = SchemaSpec.from_dict form)
-    and sketch_profile (one-pass HLL+CMS+KLL per column; params =
-    {"columns": [...], "store_path": optional SketchStore dir}).
+    and sketch_profile (HLL+CMS+KLL per column in one native aggregation;
+    params = {"columns": [...], "p": optional HLL lgConfigK (default 12),
+    "store_path": optional SketchStore dir}).
 
 Each check prints one JSON line; "partitions" counts the verdicts computed in
 this run. With a checkpoint_path, "violated_partitions", "holds" and the exit

@@ -252,8 +252,14 @@ SKETCH_SCHEMA = T.StructType(
         T.StructField("cms_depth", T.IntegerType()),
         T.StructField("cms_width", T.IntegerType()),
         T.StructField("recorded_at", T.DoubleType()),
+        T.StructField("format", T.IntegerType()),
     ]
 )
+
+#: Image format of stored sketches. 2: DataSketches HLL/KLL and Spark
+#: CountMinSketch images. Rows without a format hold the numpy images of
+#: earlier versions, which no reader decodes.
+SKETCH_FORMAT = 2
 
 
 class SketchStore:
@@ -264,7 +270,10 @@ class SketchStore:
     the cumulative profile of an append-only table is the merge of its
     per-snapshot sketches -- each new snapshot costs one scan of the DELTA,
     never of history -- and distribution drift between any two snapshots is a
-    KS test on their stored KLLs (drift.kll_ks_compare), zero scans."""
+    KS test on their stored KLLs (drift.kll_ks_compare), zero scans.
+
+    Every row carries its image ``format``; readers raise ``ValueError``
+    naming the snapshots whose latest rows are in another format."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -296,6 +305,7 @@ class SketchStore:
                 s.cms.depth,
                 s.cms.width,
                 time.time(),
+                SKETCH_FORMAT,
             )
             for c, s in profiles.items()
         ]
@@ -303,64 +313,69 @@ class SketchStore:
             f"{self.path}/batch-{uuid.uuid4().hex[:16]}"
         )
 
+    def _latest(self, snapshot_ids: list[str], column: str | None = None) -> dict:
+        """{(snapshot_id, column) -> ColumnSketches} from the latest record
+        of each, in one Spark job."""
+        ok = _current_format()
+        stored = self._frame().filter(F.col("snapshot_id").isin(snapshot_ids))
+        if column is not None:
+            stored = stored.filter(F.col("column") == column)
+        rows = stored.select(
+            "*",
+            # guarded: older rows hold bytes these functions cannot decode
+            F.when(ok, F.hll_sketch_estimate("hll")).alias("estimate"),
+            F.when(ok, F.kll_sketch_get_n_double("kll")).alias("kll_n"),
+            (~ok).alias("stale"),
+        ).collect()
+        latest = {}
+        for r in sorted(rows, key=lambda r: r.recorded_at):
+            latest[r.snapshot_id, r.column] = r
+        _require_current({s for (s, _), r in latest.items() if r.stale})
+        return {k: _column_sketches(r, bytes(r.cms)) for k, r in latest.items()}
+
     def load(self, snapshot_id: str) -> dict:
         """dict[column -> ColumnSketches] for one snapshot (latest record per
         column wins)."""
-        from pyspark_validator.sketches import CMS, HLL, KLL, ColumnSketches
-
-        import numpy as np
-
-        rows = (
-            self._frame()
-            .filter(F.col("snapshot_id") == snapshot_id)
-            .orderBy("recorded_at")
-            .collect()
-        )
-        out = {}
-        for r in rows:  # later records overwrite earlier (orderBy asc)
-            out[r.column] = ColumnSketches(
-                column=r.column,
-                hll=HLL.from_bytes(r.hll, r.hll_p),
-                cms=CMS(
-                    r.cms_depth,
-                    r.cms_width,
-                    np.frombuffer(r.cms, dtype=np.int64)
-                    .reshape(r.cms_depth, r.cms_width)
-                    .copy(),
-                    int(r.n) - int(r.n_null),
-                ),
-                kll=KLL.from_bytes(r.kll) if r.kll is not None else None,
-                n=int(r.n),
-                n_null=int(r.n_null),
-            )
-        return out
+        return {c: s for (_, c), s in self._latest([snapshot_id]).items()}
 
     def merged(self, snapshot_ids: list[str]) -> dict:
-        """Cumulative profile across snapshots by pure sketch algebra: HLL
-        register max, CMS table add, KLL merge, exact count sums. For an
-        append-only table this equals profiling the union -- at delta cost."""
-        from pyspark_validator.sketches import ColumnSketches
+        """Cumulative profile across snapshots by pure sketch algebra, in one
+        Spark aggregation over the stored rows (latest record per snapshot
+        and column): ``hll_union_agg``, ``kll_merge_agg_double`` and exact
+        count sums; the Count-Min images add in the JVM
+        (``CountMinSketch.mergeInPlace``). For an append-only table this
+        equals profiling the union -- at delta cost."""
+        from pyspark_validator.sketches import merge_count_min
 
-        acc: dict = {}
-        for sid in snapshot_ids:
-            for c, s in self.load(sid).items():
-                if c not in acc:
-                    acc[c] = s
-                else:
-                    a = acc[c]
-                    acc[c] = ColumnSketches(
-                        column=c,
-                        hll=a.hll.merge(s.hll),
-                        cms=a.cms.merge(s.cms),
-                        kll=(
-                            a.kll.merge(s.kll)
-                            if a.kll is not None and s.kll is not None
-                            else a.kll or s.kll
-                        ),
-                        n=a.n + s.n,
-                        n_null=a.n_null + s.n_null,
-                    )
-        return acc
+        stored = self._frame().filter(F.col("snapshot_id").isin(snapshot_ids))
+        ok = _current_format()
+        hll = F.hll_union_agg(F.when(ok, F.col("hll")))
+        kll = F.kll_merge_agg_double(F.when(ok, F.col("kll")))
+        rows = (
+            stored.groupBy("snapshot_id", "column")
+            .agg(F.max_by(F.struct(*stored.columns), "recorded_at").alias("r"))
+            .select("r.*")
+            .groupBy("column")
+            .agg(
+                F.collect_set(F.when(~ok, F.col("snapshot_id"))).alias("stale"),
+                hll.alias("hll"),
+                F.hll_sketch_estimate(hll).alias("estimate"),
+                kll.alias("kll"),
+                F.kll_sketch_get_n_double(kll).alias("kll_n"),
+                F.collect_list(F.when(ok, F.col("cms"))).alias("cms"),
+                F.sum("n").alias("n"),
+                F.sum("n_null").alias("n_null"),
+                F.max("hll_p").alias("hll_p"),
+                F.max("cms_depth").alias("cms_depth"),
+                F.max("cms_width").alias("cms_width"),
+            )
+            .collect()
+        )
+        _require_current(set().union(*(r.stale for r in rows)))
+        return {
+            r.column: _column_sketches(r, merge_count_min([bytes(b) for b in r.cms]))
+            for r in rows
+        }
 
     def ks_drift(
         self, column: str, snapshot_a: str, snapshot_b: str,
@@ -370,10 +385,41 @@ class SketchStore:
         KLLs alone -- no data scan."""
         from pyspark_validator.checks.drift import kll_ks_compare
 
-        a = self.load(snapshot_a).get(column)
-        b = self.load(snapshot_b).get(column)
+        stored = self._latest([snapshot_a, snapshot_b], column)
+        a = stored.get((snapshot_a, column))
+        b = stored.get((snapshot_b, column))
         if a is None or b is None or a.kll is None or b.kll is None:
             raise ValueError(
                 f"no stored KLL for {column!r} in both snapshots"
             )
         return kll_ks_compare(a.kll, b.kll, ks_threshold=ks_threshold)
+
+
+def _current_format():
+    """True for stored rows in ``SKETCH_FORMAT``; False (never NULL) else."""
+    return F.coalesce(F.col("format") == F.lit(SKETCH_FORMAT), F.lit(False))
+
+
+def _require_current(stale: set) -> None:
+    if stale:
+        raise ValueError(
+            f"sketch store rows of snapshot(s) {', '.join(sorted(stale))} are "
+            f"not in sketch format {SKETCH_FORMAT} (written by an earlier "
+            "version); re-profile them with sketch_profile and record them again"
+        )
+
+
+def _column_sketches(r, cms: bytes):
+    """One stored or merged row (with its ``estimate`` and ``kll_n``) as
+    ``ColumnSketches``."""
+    from pyspark_validator.sketches import CmsImage, ColumnSketches, HllImage, KllImage
+
+    n, n_null = int(r.n), int(r.n_null)
+    return ColumnSketches(
+        column=r.column,
+        hll=HllImage(bytes(r.hll), r.hll_p, float(r.estimate)),
+        cms=CmsImage(cms, r.cms_depth, r.cms_width, n - n_null),
+        kll=KllImage(bytes(r.kll), int(r.kll_n)) if r.kll_n else None,
+        n=n,
+        n_null=n_null,
+    )

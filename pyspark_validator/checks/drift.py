@@ -174,16 +174,16 @@ def kll_ks_drift(
     k: int = 200,
     ks_threshold: float = 0.1,
 ) -> dict:
-    """KS drift from two mergeable KLL sketches (sketches.py) instead of a
-    binned histogram: D = max over both sketches' support points of
-    |rank_b(x) - rank_c(x)|. No bin-edge choice, no shuffle beyond the
-    mapInPandas sketch partials, and the two sketches can come from DIFFERENT
-    runs/snapshots (deserialize + compare), which the histogram path cannot
-    offer. Rank error of the estimate is O(1/k) per side.
+    """KS drift from two mergeable KLL sketches (sketches.kll_sketch) instead
+    of a binned histogram: D = max over support points x of |rank_b(x) -
+    rank_c(x)|. No bin-edge choice, one aggregation per side, and the two
+    sketches can come from DIFFERENT runs/snapshots (stored images), which
+    the histogram path cannot offer. Rank error of the estimate is O(1/k)
+    per side.
 
     Returns {ks_stat, n_b, n_c, drift_detected, sketch_b, sketch_c} -- the
-    sketches are returned so callers can persist them in a checkpoint
-    manifest for future comparisons."""
+    sketches are returned so callers can persist them for future
+    comparisons."""
     from pyspark_validator.sketches import kll_sketch
 
     sb = kll_sketch(baseline, column, k=k)
@@ -191,25 +191,42 @@ def kll_ks_drift(
     return kll_ks_compare(sb, sc, ks_threshold=ks_threshold)
 
 
-def kll_ks_compare(sb, sc, ks_threshold: float = 0.1) -> dict:
-    """KS comparison of two already-built KLL sketches (e.g. one loaded from a
-    previous run's checkpoint manifest)."""
-    import numpy as np
+#: KS support resolution: each sketch contributes its quantiles at ranks
+#: 0, 1/G, ..., 1. Between adjacent support points either CDF moves by about
+#: 1/G at most, far below a k=200 sketch's own rank error.
+_KS_GRID = 1024
 
-    support = np.unique(
-        np.concatenate(
-            [np.concatenate(sb.levels) if sb.levels else np.empty(0),
-             np.concatenate(sc.levels) if sc.levels else np.empty(0)]
-        )
-    )
-    if not len(support) or not sb.n or not sc.n:
+
+def kll_ks_compare(sb, sc, ks_threshold: float = 0.1) -> dict:
+    """KS comparison of two already-built KLL images (e.g. one loaded from a
+    previous run's SketchStore): ``kll_sketch_get_rank_double`` of both
+    sketches at the union of their ``_KS_GRID``-step quantiles, in one
+    single-row Spark job."""
+    if not sb.n or not sc.n:
         return {
             "ks_stat": float("nan"), "n_b": sb.n, "n_c": sc.n,
             "drift_detected": False, "sketch_b": sb, "sketch_c": sc,
         }
-    d = max(abs(sb.rank(x) - sc.rank(x)) for x in support)
+    from pyspark_validator.sketches import one_row
+
+    b, c = F.lit(sb.image), F.lit(sc.image)
+    # the rank/quantile arguments must be foldable: a literal array, parsed
+    # from one string rather than built from _KS_GRID + 1 lit() columns
+    grid = F.expr(
+        "array(" + ", ".join(f"{i / _KS_GRID!r}D" for i in range(_KS_GRID + 1)) + ")"
+    )
+    support = F.array_union(
+        F.kll_sketch_get_quantile_double(b, grid),
+        F.kll_sketch_get_quantile_double(c, grid),
+    )
+    gap = F.zip_with(
+        F.kll_sketch_get_rank_double(b, support),
+        F.kll_sketch_get_rank_double(c, support),
+        lambda x, y: F.abs(x - y),
+    )
+    d = float(one_row(F.array_max(gap))[0])
     return {
-        "ks_stat": float(d),
+        "ks_stat": d,
         "n_b": sb.n,
         "n_c": sc.n,
         "drift_detected": bool(d > ks_threshold),

@@ -215,9 +215,7 @@ def _sketch_profile(s: "ValidationSuite", spec: CheckSpec, df: DataFrame) -> Dat
     from pyspark_validator.sketches import sketch_profile
 
     p = spec.params
-    prof = sketch_profile(
-        df, p["columns"], p=p.get("p", 12), fanin=p.get("fanin", 64)
-    )
+    prof = sketch_profile(df, p["columns"], p=p.get("p", 12))
     if p.get("store_path"):
         from pyspark_validator.checkpoint import SketchStore
 
@@ -389,6 +387,18 @@ def _only(df: DataFrame, pending: list[int], universe: range) -> DataFrame:
     return df.where(F.col("partition_id").isin(pending))
 
 
+class _CheckpointedFrame:
+    """Releases the blocks behind a local checkpoint, which
+    ``DataFrame.unpersist`` does not reach: they belong to the RDD under the
+    frame's ``LogicalRDD`` plan, not to a cached plan."""
+
+    def __init__(self, df: DataFrame):
+        self._rdd = df._jdf.logicalPlan().rdd()
+
+    def unpersist(self) -> None:
+        self._rdd.unpersist(False)
+
+
 class ValidationSuite:
     def __init__(
         self,
@@ -416,7 +426,8 @@ class ValidationSuite:
             CheckpointManager(spark, checkpoint_path) if checkpoint_path else None
         )
         # objects holding persisted frames (a run's FusedPass, AssocCheck
-        # style censuses); drained by unpersist() so long sessions don't leak
+        # style censuses, recorded verdicts); drained by unpersist() so long
+        # sessions don't leak
         self._live_checks: list = []
 
     def _recorded(self, checks: list[CheckSpec]) -> dict[str, dict[int, str]]:
@@ -434,8 +445,12 @@ class ValidationSuite:
     def _record(self, name: str, verdicts: DataFrame) -> DataFrame:
         if self.ckpt is None:
             return verdicts
-        # materialize once so record + return don't recompute
-        verdicts = verdicts.localCheckpoint(eager=True)
+        # a lazy local checkpoint: the manifest write fills it, so record +
+        # return cost one job and don't recompute. persist() would cost two
+        # (AQE materializes a cached table as its own stage) and would add a
+        # cached plan that every later query's planning is matched against.
+        verdicts = verdicts.localCheckpoint(eager=False)
+        self._live_checks.append(_CheckpointedFrame(verdicts))
         self.ckpt.record_verdicts(name, self.snapshot_id, verdicts)
         return verdicts
 

@@ -1,20 +1,22 @@
-"""Mergeable sketches: HyperLogLog (register-exposed), Count-Min, and KLL.
+"""Mergeable column sketches: Spark's native HLL, Count-Min and KLL images for
+column profiles, and a register-exposed HyperLogLog for FAIDA.
 
-Why custom: Spark's approx_count_distinct is HLL++ but never exposes registers, so
+Column profiles (:func:`sketch_profile`) are ONE ``df.agg``: per column, exact
+row and null counts, a DataSketches HLL (``hll_sketch_agg`` over xxhash64), a
+Spark Count-Min sketch (``count_min_sketch`` over xxhash64) and, for numeric
+columns, a DataSketches KLL (``kll_sketch_agg_double``). All of it is JVM work
+in one scan; no Python worker, no Arrow round trip. Each sketch comes back as
+its native binary image, which the checkpoint ``SketchStore`` persists and
+merges across snapshots (``hll_union_agg``, ``kll_merge_agg_double``,
+``CountMinSketch.mergeInPlace``) without rescanning old data.
+
+Why custom, for FAIDA only: Spark's HLL functions never expose registers, so
 FAIDA-style register-wise inclusion testing (reference:
-faida/inclusion_testing/hll_data.h:28-37 -- "dep subseteq ref iff every register of
-dep <= ref's") and cross-snapshot sketch merging (checkpoint manifests) are
-impossible with the built-in. Likewise percentile_approx answers a one-shot
-query but cannot hand back a sketch to persist in a checkpoint manifest and
-merge across snapshots/runs -- the KLL here can.
-
-Execution model: the hashing is done JVM-side (xxhash64 -- whole-stage codegen),
-then ONE mapInPandas pass computes a per-Arrow-batch partial sketch (numpy
-vectorized, no per-row Python), emitting one serialized sketch row per batch.
-Partials are tiny (2^p bytes for HLL, depth*width*8 for CMS) and are merged on the
-driver -- a few KB per partition, the classic treeAggregate shape. Sketches
-serialize to bytes => they can be persisted in the checkpoint manifest and merged
-across snapshots/runs (the mergeable-sketch requirement of the north star).
+faida/inclusion_testing/hll_data.h:28-37 -- "dep subseteq ref iff every
+register of dep <= ref's") needs its own :class:`HLL`. Its hashing is done
+JVM-side (xxhash64), then ONE mapInPandas pass computes a per-Arrow-batch
+partial register file (numpy vectorized, no per-row Python); the driver
+max-merges the 2^p-byte partials.
 """
 
 from __future__ import annotations
@@ -24,8 +26,9 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _MASK64 = np.uint64(0xFFFFFFFFFFFFFFFF)
 
@@ -182,222 +185,137 @@ def hll_inclusion(
 
 
 # ---------------------------------------------------------------------------
-# Count-Min sketch (heavy hitters at 10^12 scale: top-k without a full groupBy)
-@dataclass
-class CMS:
-    depth: int
-    width: int
-    table: np.ndarray  # int64[depth, width]
-    n: int = 0
+# Native sketch images: DataSketches HLL/KLL and Spark's CountMinSketch, built
+# by Spark aggregates and kept as the bytes those aggregates return
 
-    def merge(self, other: "CMS") -> "CMS":
-        assert (self.depth, self.width) == (other.depth, other.width)
-        return CMS(self.depth, self.width, self.table + other.table, self.n + other.n)
-
-    def estimate_hashes(self, hashes: np.ndarray) -> np.ndarray:
-        """Point-estimate counts for a batch of xxhash64 values (vectorized)."""
-        h = hashes.astype(np.uint64)
-        est = np.full(len(h), np.iinfo(np.int64).max, dtype=np.int64)
-        for d in range(self.depth):
-            idx = ((h * np.uint64(2 * d + 1) + np.uint64(d * 0x9E3779B9)) & _MASK64) % np.uint64(self.width)
-            est = np.minimum(est, self.table[d, idx.astype(np.int64)])
-        return est
-
-    def to_bytes(self) -> bytes:
-        return self.table.tobytes()
+# Count-Min hash seed: images merge only when they share it
+_CMS_SEED = 42
+# the types a KLL takes: those castable to double. Timestamps cast to epoch
+# seconds; date, timestamp_ntz and intervals have no cast to double
+_NUMERIC_TYPES = (T.NumericType, T.TimestampType)
 
 
-def cms_sketch(df: DataFrame, columns: list[str], depth: int = 5, width: int = 8192) -> CMS:
-    """Count-Min over tuple frequencies; same partial/merge shape as hll_sketch."""
-    hashed = df.select(F.xxhash64(*columns).alias("h"))
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        table = np.zeros((depth, width), dtype=np.int64)
-        n = 0
-        for b in batches:
-            if not len(b):
-                continue
-            h = b["h"].to_numpy(dtype=np.int64).view(np.uint64)
-            n += len(h)
-            for d in range(depth):
-                idx = ((h * np.uint64(2 * d + 1) + np.uint64(d * 0x9E3779B9)) & _MASK64) % np.uint64(width)
-                np.add.at(table[d], idx.astype(np.int64), 1)
-        if n:
-            yield pd.DataFrame({"table": [table.tobytes()], "n": [n]})
-
-    rows = hashed.mapInPandas(partials, "table binary, n long").collect()
-    out = CMS(depth, width, np.zeros((depth, width), dtype=np.int64), 0)
-    for r in rows:
-        out = out.merge(
-            CMS(depth, width, np.frombuffer(r.table, dtype=np.int64).reshape(depth, width).copy(), r.n)
-        )
-    return out
+def one_row(*cols: Column) -> Row:
+    """Evaluate expressions over literal sketch images: one single-row job."""
+    return SparkSession.active().range(1).select(*cols).collect()[0]
 
 
-# ---------------------------------------------------------------------------
-# KLL quantile sketch (mergeable; persists in checkpoint manifests)
-
-
-@dataclass
-class KLL:
-    """Karnin-Lang-Liberty quantile sketch over doubles.
-
-    ``levels[i]`` holds items of weight 2^i; level capacities shrink
-    geometrically from ``k`` at the top (c = 2/3, floor 2). Compaction keeps
-    every other element of a sorted over-full level and promotes it one level
-    up; the kept-offset alternates DETERMINISTICALLY (a counter, not a coin)
-    so runs are reproducible -- the textbook analysis randomizes it, and the
-    alternation preserves the rank-error bound on stream-order-independent
-    data, which is what parquet scans give us. Size is O(k) regardless of n;
-    rank error ~ O(1/k)."""
-
-    k: int
-    levels: list[np.ndarray]
-    n: int = 0
-    _coin: int = 0
-
-    @classmethod
-    def empty(cls, k: int = 200) -> "KLL":
-        return cls(k=k, levels=[np.empty(0, dtype=np.float64)], n=0)
-
-    def _cap(self, level: int) -> int:
-        h = len(self.levels) - 1
-        return max(int(np.ceil(self.k * (2.0 / 3.0) ** (h - level))), 2)
-
-    def _compress(self) -> None:
-        while sum(len(b) for b in self.levels) > sum(
-            self._cap(i) for i in range(len(self.levels))
-        ):
-            for i, buf in enumerate(self.levels):
-                if len(buf) > self._cap(i):
-                    srt = np.sort(buf)
-                    keep = srt[self._coin % 2 :: 2]
-                    self._coin += 1
-                    self.levels[i] = np.empty(0, dtype=np.float64)
-                    if i + 1 == len(self.levels):
-                        self.levels.append(np.empty(0, dtype=np.float64))
-                    self.levels[i + 1] = np.concatenate([self.levels[i + 1], keep])
-                    break
-            else:
-                break
-
-    def update_batch(self, values: np.ndarray) -> None:
-        v = np.asarray(values, dtype=np.float64)
-        v = v[~np.isnan(v)]
-        if not len(v):
-            return
-        self.levels[0] = np.concatenate([self.levels[0], v])
-        self.n += len(v)
-        self._compress()
-
-    def merge(self, other: "KLL") -> "KLL":
-        assert self.k == other.k
-        out = KLL.empty(self.k)
-        out.n = self.n + other.n
-        depth = max(len(self.levels), len(other.levels))
-        out.levels = []
-        for i in range(depth):
-            a = self.levels[i] if i < len(self.levels) else np.empty(0)
-            b = other.levels[i] if i < len(other.levels) else np.empty(0)
-            out.levels.append(np.concatenate([a, b]).astype(np.float64))
-        out._coin = self._coin + other._coin
-        out._compress()
-        return out
-
-    def _weighted(self) -> tuple[np.ndarray, np.ndarray]:
-        vals = np.concatenate(self.levels) if self.levels else np.empty(0)
-        wts = np.concatenate(
-            [np.full(len(b), 1 << i, dtype=np.int64) for i, b in enumerate(self.levels)]
-        ) if self.levels else np.empty(0, dtype=np.int64)
-        order = np.argsort(vals, kind="mergesort")
-        return vals[order], wts[order]
-
-    def quantile(self, q: float) -> float:
-        vals, wts = self._weighted()
-        if not len(vals):
-            return float("nan")
-        cum = np.cumsum(wts)
-        target = q * cum[-1]
-        return float(vals[int(np.searchsorted(cum, target, side="left").clip(0, len(vals) - 1))])
-
-    def quantiles(self, qs: list[float]) -> list[float]:
-        return [self.quantile(q) for q in qs]
-
-    def rank(self, x: float) -> float:
-        """Approximate fraction of items <= x."""
-        vals, wts = self._weighted()
-        if not len(vals):
-            return float("nan")
-        cum = np.cumsum(wts)
-        i = int(np.searchsorted(vals, x, side="right"))
-        return float(cum[i - 1] / cum[-1]) if i > 0 else 0.0
-
-    def to_bytes(self) -> bytes:
-        import struct
-
-        head = struct.pack("<qqq", self.k, self.n, len(self.levels))
-        lens = struct.pack(f"<{len(self.levels)}q", *[len(b) for b in self.levels])
-        return head + lens + b"".join(b.astype(np.float64).tobytes() for b in self.levels)
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "KLL":
-        import struct
-
-        k, n, nlev = struct.unpack_from("<qqq", data, 0)
-        off = 24
-        lens = struct.unpack_from(f"<{nlev}q", data, off)
-        off += 8 * nlev
-        levels = []
-        for ln in lens:
-            levels.append(np.frombuffer(data, dtype=np.float64, count=ln, offset=off).copy())
-            off += 8 * ln
-        return cls(k=int(k), levels=levels, n=int(n))
-
-
-def kll_sketch(df: DataFrame, column: str, k: int = 200) -> KLL:
-    """Build a KLL over a numeric column: one mapInPandas pass emits a
-    serialized per-partition sketch (O(k) bytes), driver merges -- the same
-    treeAggregate shape as hll_sketch/cms_sketch, so the result can be stored
-    in the checkpoint manifest and merged with later snapshots' sketches."""
-    vals = df.select(F.col(column).cast("double").alias("v")).filter(
-        F.col("v").isNotNull()
+def _count_min(key: Column, depth: int, width: int) -> Column:
+    """``count_min_sketch`` of exactly ``depth`` x ``width`` counters. Spark
+    sizes it as width = ceil(2 / eps) and depth = ceil(-log2(1 - confidence));
+    asking for half a step less keeps both ceilings exact under rounding."""
+    return F.count_min_sketch(
+        key,
+        F.lit(2.0 / (width - 0.5)),
+        F.lit(1.0 - 2.0 ** (0.5 - depth)),
+        F.lit(_CMS_SEED),
     )
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sk = KLL.empty(k)
-        for b in batches:
-            if len(b):
-                sk.update_batch(b["v"].to_numpy(dtype=np.float64))
-        if sk.n:
-            yield pd.DataFrame({"sk": [sk.to_bytes()]})
 
-    rows = vals.mapInPandas(partials, "sk binary").collect()
-    out = KLL.empty(k)
-    for r in rows:
-        out = out.merge(KLL.from_bytes(r.sk))
-    return out
+def _jvm_count_min(image: bytes):
+    sc = SparkSession.active().sparkContext
+    return sc._jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom(image)
+
+
+def merge_count_min(images: list[bytes]) -> bytes:
+    """One Count-Min image from images of equal depth, width and seed
+    (``CountMinSketch.mergeInPlace``: counters add)."""
+    acc = _jvm_count_min(images[0])
+    for image in images[1:]:
+        acc.mergeInPlace(_jvm_count_min(image))
+    return bytes(acc.toByteArray())
+
+
+@dataclass(frozen=True)
+class HllImage:
+    """A DataSketches HLL image (``hll_sketch_agg``/``hll_union_agg``) and
+    the distinct estimate the building aggregation read from it."""
+
+    image: bytes
+    p: int
+    estimate: float
+
+    def to_bytes(self) -> bytes:
+        return self.image
+
+
+@dataclass(frozen=True)
+class CmsImage:
+    """A Spark ``CountMinSketch`` image (``count_min_sketch``) over xxhash64
+    keys, and the number of keys it counted."""
+
+    image: bytes
+    depth: int
+    width: int
+    n: int
+
+    def estimate_hashes(self, hashes) -> list[int]:
+        """Point-estimate counts (upper bounds) for xxhash64 values."""
+        cms = _jvm_count_min(self.image)
+        return [int(cms.estimateCount(int(h))) for h in hashes]
+
+    def to_bytes(self) -> bytes:
+        return self.image
+
+
+@dataclass(frozen=True)
+class KllImage:
+    """A DataSketches KLL doubles image (``kll_sketch_agg_double``) and its
+    item count. Rank error is O(1/k); images merge across snapshots."""
+
+    image: bytes
+    n: int
+
+    @classmethod
+    def from_bytes(cls, image: bytes) -> "KllImage":
+        return cls(image, int(one_row(F.kll_sketch_get_n_double(F.lit(image)))[0]))
+
+    def quantiles(self, qs: list[float]) -> list[float]:
+        if not self.n:
+            return [float("nan")] * len(qs)
+        ranks = F.lit([float(q) for q in qs])
+        return list(one_row(F.kll_sketch_get_quantile_double(F.lit(self.image), ranks))[0])
+
+    def to_bytes(self) -> bytes:
+        return self.image
+
+
+def cms_sketch(df: DataFrame, columns: list[str], depth: int = 5, width: int = 8192) -> CmsImage:
+    """Count-Min over the tuple frequencies of ``columns``: one aggregation."""
+    r = df.agg(
+        _count_min(F.xxhash64(*columns), depth, width).alias("cms"),
+        F.count(F.lit(1)).alias("n"),
+    ).collect()[0]
+    return CmsImage(bytes(r.cms), depth, width, int(r.n))
+
+
+def kll_sketch(df: DataFrame, column: str, k: int = 200) -> KllImage:
+    """KLL over a numeric column (NULL and NaN skipped): one aggregation. The
+    image can be stored and merged with later snapshots' sketches."""
+    kll = F.kll_sketch_agg_double(F.col(column).cast("double"), k)
+    r = df.agg(kll.alias("kll"), F.kll_sketch_get_n_double(kll).alias("n")).collect()[0]
+    return KllImage(bytes(r.kll), int(r.n))
 
 
 # ---------------------------------------------------------------------------
-# one-pass multi-column sketch profile (the north star's "combined in a
-# single salted, skew-aware shuffle pass")
+# one-pass multi-column sketch profile
 
 
 @dataclass
 class ColumnSketches:
     """All three mergeable sketches for one column, plus exact null/row
-    counts, as produced by :func:`sketch_profile`. Serializable pieces can be
-    persisted in the checkpoint manifest and merged with later snapshots."""
+    counts, as produced by :func:`sketch_profile`. The images can be
+    persisted in a ``SketchStore`` and merged with later snapshots."""
 
     column: str
-    hll: HLL
-    cms: CMS
-    kll: "KLL | None"
+    hll: HllImage
+    cms: CmsImage
+    kll: "KllImage | None"
     n: int
     n_null: int
 
     def distinct_est(self) -> float:
-        return self.hll.cardinality()
+        return self.hll.estimate
 
     def quantiles(self, qs: list[float]) -> "list[float] | None":
         return self.kll.quantiles(qs) if self.kll is not None else None
@@ -409,153 +327,38 @@ class ColumnSketches:
         rows = spark.createDataFrame(
             [(v,) for v in values], f"v {'string' if values and isinstance(values[0], str) else 'bigint'}"
         ).select(F.xxhash64("v").alias("h")).collect()
-        hashes = np.array([r.h for r in rows], dtype=np.int64)
-        est = self.cms.estimate_hashes(hashes)
-        return {v: int(e) for v, e in zip(values, est)}
+        est = self.cms.estimate_hashes([r.h for r in rows])
+        return dict(zip(values, est))
 
 
-def _sketch_profile_frame(
+def _profile_aggregate(
     df: DataFrame,
     columns: list[str],
-    p: int = 12,
-    kll_k: int = 200,
-    cms_depth: int = 5,
-    cms_width: int = 8192,
-    fanin: int = 64,
-) -> tuple[DataFrame, list]:
-    """HLL + CMS + KLL for EVERY requested column in ONE scan.
-
-    The separate ``hll_sketch``/``cms_sketch``/``kll_sketch`` builders each
-    cost a table scan; a 100 TB profile of 50 columns must not cost 150
-    scans. Here the per-column hashing/casting is JVM-side (xxhash64 +
-    try-cast to double), one mapInPandas pass updates every column's three
-    sketches per Arrow batch (numpy, no per-row Python), and emits ONE
-    serialized partial row per (input partition, column).
-
-    Merging is a bounded-fan-in tree, not a driver collect: level 1 groups
-    partials by (column, salt) with ``salt = spark_partition_id() % fanin``
-    -- the salt bounds how many partials any single reducer materializes
-    (applyInPandas loads a whole group: group bytes ~ (P/fanin) *
-    sketch_bytes, so set fanin ~ sqrt(P) for very large task counts) and
-    spreads the merge across the cluster instead of hot-spotting one reducer
-    per column -- then level 2 merges the <=fanin survivors per column. Two
-    tiny shuffles (P*C rows, then fanin*C rows); the driver receives exactly
-    C rows.
-
-    Numeric columns (castable to double) get a KLL; the KLL of a non-numeric
-    column is None. NULLs are counted exactly and excluded from all sketches.
-    """
-    meta = []
-    sel = []
-    # date deliberately absent: cast(date as double) is not a valid Spark
-    # cast; timestamps cast to epoch seconds
-    numeric_kinds = ("int", "bigint", "smallint", "tinyint", "double", "float",
-                     "decimal", "timestamp")
+    p: int,
+    kll_k: int,
+    cms_depth: int,
+    cms_width: int,
+) -> DataFrame:
+    """The one aggregation behind :func:`sketch_profile`: a single row with
+    ``n`` and, for column i, ``n_null{i}``, ``hll{i}``, ``est{i}``,
+    ``cms{i}`` and, if numeric, ``kll{i}`` and ``kll_n{i}``. NULL cells are
+    counted and skipped by every sketch."""
+    aggs = [F.count(F.lit(1)).alias("n")]
     for i, c in enumerate(columns):
-        dt = df.schema[c].dataType.simpleString()
-        is_num = any(dt.startswith(k) for k in numeric_kinds)
-        meta.append((c, is_num))
-        sel.append(F.xxhash64(F.col(c)).alias(f"h{i}"))
-        sel.append(F.col(c).isNull().alias(f"m{i}"))
-        if is_num:
-            sel.append(F.col(c).cast("double").alias(f"v{i}"))
-
-    hashed = df.select(*sel)
-    out_schema = (
-        "col string, hll binary, cms binary, kll binary, n long, n_null long"
-    )
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        regs = {i: np.zeros(1 << p, dtype=np.uint8) for i in range(len(meta))}
-        tables = {
-            i: np.zeros((cms_depth, cms_width), dtype=np.int64)
-            for i in range(len(meta))
-        }
-        klls = {i: KLL.empty(kll_k) for i, (_, num) in enumerate(meta) if num}
-        n = {i: 0 for i in range(len(meta))}
-        n_null = {i: 0 for i in range(len(meta))}
-        for b in batches:
-            if not len(b):
-                continue
-            for i, (_, num) in enumerate(meta):
-                mask = b[f"m{i}"].to_numpy(dtype=bool)
-                h = b[f"h{i}"].to_numpy(dtype=np.int64)[~mask]
-                n[i] += len(b)
-                n_null[i] += int(mask.sum())
-                if len(h):
-                    hu = h.view(np.uint64)
-                    _hll_update(regs[i], hu, p)
-                    for d in range(cms_depth):
-                        idx = (
-                            (hu * np.uint64(2 * d + 1) + np.uint64(d * 0x9E3779B9))
-                            & _MASK64
-                        ) % np.uint64(cms_width)
-                        # bincount beats np.add.at ~3x at these widths
-                        tables[i][d] += np.bincount(
-                            idx.astype(np.int64), minlength=cms_width
-                        )
-                if num:
-                    v = b[f"v{i}"].to_numpy(dtype=np.float64)
-                    v = v[~np.isnan(v)]
-                    if len(v):
-                        klls[i].update_batch(v)
-        rows = []
-        for i, (c, num) in enumerate(meta):
-            if n[i] == 0:
-                continue
-            rows.append(
-                {
-                    "col": c,
-                    "hll": regs[i].tobytes(),
-                    "cms": tables[i].tobytes(),
-                    "kll": klls[i].to_bytes() if num and klls[i].n else None,
-                    "n": n[i],
-                    "n_null": n_null[i],
-                }
-            )
-        if rows:
-            yield pd.DataFrame(rows)
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        regs = None
-        table = None
-        kll = None
-        n = 0
-        n_null = 0
-        for r in pdf.itertuples(index=False):
-            regs = (
-                np.frombuffer(r.hll, dtype=np.uint8).copy()
-                if regs is None
-                else np.maximum(regs, np.frombuffer(r.hll, dtype=np.uint8))
-            )
-            t = np.frombuffer(r.cms, dtype=np.int64).reshape(cms_depth, cms_width)
-            table = t.copy() if table is None else table + t
-            if r.kll is not None:
-                k2 = KLL.from_bytes(r.kll)
-                kll = k2 if kll is None else kll.merge(k2)
-            n += int(r.n)
-            n_null += int(r.n_null)
-        return pd.DataFrame(
-            [
-                {
-                    "col": pdf["col"].iloc[0],
-                    "hll": regs.tobytes(),
-                    "cms": table.tobytes(),
-                    "kll": kll.to_bytes() if kll is not None else None,
-                    "n": n,
-                    "n_null": n_null,
-                }
-            ]
-        )
-
-    level0 = hashed.mapInPandas(partials, out_schema).withColumn(
-        "salt", F.spark_partition_id() % F.lit(fanin)
-    )
-    level1 = level0.groupBy("col", "salt").applyInPandas(
-        lambda pdf: merge_group(pdf.drop(columns=["salt"])), out_schema
-    )
-    final = level1.groupBy("col").applyInPandas(merge_group, out_schema)
-    return final, meta
+        col = F.col(c)
+        # xxhash64(NULL) is the seed, not NULL: mask it so the sketches skip it
+        key = F.when(col.isNotNull(), F.xxhash64(col))
+        hll = F.hll_sketch_agg(key, p)
+        aggs += [
+            F.count_if(col.isNull()).alias(f"n_null{i}"),
+            hll.alias(f"hll{i}"),
+            F.hll_sketch_estimate(hll).alias(f"est{i}"),
+            _count_min(key, cms_depth, cms_width).alias(f"cms{i}"),
+        ]
+        if isinstance(df.schema[c].dataType, _NUMERIC_TYPES):
+            kll = F.kll_sketch_agg_double(col.cast("double"), kll_k)
+            aggs += [kll.alias(f"kll{i}"), F.kll_sketch_get_n_double(kll).alias(f"kll_n{i}")]
+    return df.agg(*aggs)
 
 
 def sketch_profile(
@@ -565,29 +368,24 @@ def sketch_profile(
     kll_k: int = 200,
     cms_depth: int = 5,
     cms_width: int = 8192,
-    fanin: int = 64,
 ) -> dict[str, ColumnSketches]:
-    final, meta = _sketch_profile_frame(
-        df, columns, p=p, kll_k=kll_k, cms_depth=cms_depth,
-        cms_width=cms_width, fanin=fanin,
-    )
-    result = {}
-    for r in final.collect():
-        c = r.col
-        is_num = dict(meta)[c]
-        result[c] = ColumnSketches(
+    """HLL + CMS + KLL for EVERY requested column in ONE scan and one JVM
+    aggregation (:func:`_profile_aggregate`); the driver receives one row.
+
+    Numeric columns (castable to double) get a KLL; the KLL of a non-numeric
+    column, or of a column with no non-NULL value, is None."""
+    r = _profile_aggregate(df, columns, p, kll_k, cms_depth, cms_width).collect()[0].asDict()
+    n = int(r["n"])
+    out = {}
+    for i, c in enumerate(columns):
+        n_null = int(r[f"n_null{i}"])
+        kll_n = int(r.get(f"kll_n{i}") or 0)
+        out[c] = ColumnSketches(
             column=c,
-            hll=HLL.from_bytes(r.hll, p),
-            cms=CMS(
-                cms_depth,
-                cms_width,
-                np.frombuffer(r.cms, dtype=np.int64)
-                .reshape(cms_depth, cms_width)
-                .copy(),
-                int(r.n) - int(r.n_null),
-            ),
-            kll=KLL.from_bytes(r.kll) if (is_num and r.kll is not None) else None,
-            n=int(r.n),
-            n_null=int(r.n_null),
+            hll=HllImage(bytes(r[f"hll{i}"]), p, float(r[f"est{i}"])),
+            cms=CmsImage(bytes(r[f"cms{i}"]), cms_depth, cms_width, n - n_null),
+            kll=KllImage(bytes(r[f"kll{i}"]), kll_n) if kll_n else None,
+            n=n,
+            n_null=n_null,
         )
-    return result
+    return out

@@ -242,10 +242,8 @@ def test_sketch_store_roundtrip_merge_and_drift(spark, tmp_path):
     """Per-snapshot sketch profiles persist, reload byte-identically, merge
     by pure algebra into the union profile, and answer KS drift with zero
     data scans."""
-    import numpy as np
-
     from pyspark_validator.checkpoint import SketchStore
-    from pyspark_validator.sketches import sketch_profile
+    from pyspark_validator.sketches import one_row, sketch_profile
 
     s1 = spark.range(0, 1500).selectExpr(
         "id as k", "cast(id as double) as x"
@@ -256,24 +254,32 @@ def test_sketch_store_roundtrip_merge_and_drift(spark, tmp_path):
     ).repartition(4)
 
     store = SketchStore(spark, str(tmp_path / "sketches"))
-    p1 = sketch_profile(s1, ["k", "x"], fanin=4)
-    p2 = sketch_profile(s2, ["k", "x"], fanin=4)
+    p1 = sketch_profile(s1, ["k", "x"])
+    p2 = sketch_profile(s2, ["k", "x"])
     store.record("snap-1", p1)
     store.record("snap-2", p2)
 
-    # roundtrip: registers byte-identical
+    # roundtrip: native images byte-identical
     back = store.load("snap-1")
     assert set(back) == {"k", "x"}
-    assert np.array_equal(back["k"].hll.registers, p1["k"].hll.registers)
-    assert np.array_equal(back["k"].cms.table, p1["k"].cms.table)
+    assert back["k"].hll.to_bytes() == p1["k"].hll.to_bytes()
+    assert back["k"].cms.to_bytes() == p1["k"].cms.to_bytes()
     assert back["x"].kll.n == p1["x"].kll.n
 
-    # merged == profile of the union (HLL/CMS exactly; counts exactly)
-    union_prof = sketch_profile(s1.unionByName(s2), ["k", "x"], fanin=4)
+    # merged == profile of the union (HLL registers and CMS image exactly;
+    # counts exactly). A union image reads its registers through the
+    # composite estimator, a directly built one through HIP; a self-union
+    # puts both on the composite one, so equal registers give equal estimates.
+    union_prof = sketch_profile(s1.unionByName(s2), ["k", "x"])
     m = store.merged(["snap-1", "snap-2"])
     assert m["k"].n == 3000 and m["k"].n_null == 0
-    assert np.array_equal(m["k"].hll.registers, union_prof["k"].hll.registers)
-    assert np.array_equal(m["k"].cms.table, union_prof["k"].cms.table)
+
+    def composite(hll):
+        img = F.lit(hll.to_bytes())
+        return one_row(F.hll_sketch_estimate(F.hll_union(img, img)))[0]
+
+    assert composite(m["k"].hll) == composite(union_prof["k"].hll)
+    assert m["k"].cms.to_bytes() == union_prof["k"].cms.to_bytes()
     # KLL merge: same mass, quantiles within envelope
     assert m["x"].kll.n == union_prof["x"].kll.n
     got = m["x"].quantiles([0.5])[0]
@@ -285,6 +291,41 @@ def test_sketch_store_roundtrip_merge_and_drift(spark, tmp_path):
     assert d["drift_detected"] and d["ks_stat"] > 0.9
     with pytest.raises(ValueError):
         store.ks_drift("k", "snap-1", "missing-snap")
+
+
+def test_sketch_store_rejects_rows_without_format(spark, tmp_path):
+    """A store batch in the schema that predates the format column (numpy
+    images) is never decoded: ``load``, ``merged`` and ``ks_drift`` raise
+    ValueError naming the snapshot and asking to re-profile it, while rows in
+    the current format still read and a re-profiled snapshot reads again."""
+    from pyspark.sql import types as T
+
+    from pyspark_validator.checkpoint import SKETCH_SCHEMA, SketchStore
+    from pyspark_validator.sketches import sketch_profile
+
+    path = str(tmp_path / "sketches")
+    old_schema = T.StructType([f for f in SKETCH_SCHEMA if f.name != "format"])
+    spark.createDataFrame(
+        [("snap-old", "x", bytes(1 << 12), bytes(5 * 8192 * 8), bytes(48),
+          100, 0, 12, 5, 8192, 1.0)],
+        old_schema,
+    ).write.parquet(f"{path}/batch-0000000000000000")
+    store = SketchStore(spark, path)
+    new = spark.range(100).selectExpr("cast(id as double) as x")
+    store.record("snap-new", sketch_profile(new, ["x"]))
+
+    assert store.load("snap-new")["x"].kll.n == 100
+    for read in (
+        lambda: store.load("snap-old"),
+        lambda: store.merged(["snap-old", "snap-new"]),
+        lambda: store.ks_drift("x", "snap-old", "snap-new"),
+    ):
+        with pytest.raises(ValueError, match=r"snap-old.*re-profile"):
+            read()
+    # re-profiling the snapshot supersedes its old rows
+    store.record("snap-old", sketch_profile(new, ["x"]))
+    assert store.load("snap-old")["x"].n == 100
+    assert store.merged(["snap-old", "snap-new"])["x"].n == 200
 
 
 def test_suite_sketch_profile_kind(spark, tmp_path):
@@ -305,8 +346,7 @@ def test_suite_sketch_profile_kind(spark, tmp_path):
             CheckSpec(
                 name="prof",
                 kind="sketch_profile",
-                params={"columns": ["doc_id", "score"], "store_path": store_path,
-                        "fanin": 4},
+                params={"columns": ["doc_id", "score"], "store_path": store_path},
             )
         ]
     )
@@ -527,7 +567,7 @@ def test_rerun_sketch_profile_adds_no_store_batch(spark, tmp_path):
     spec = CheckSpec(
         name="prof",
         kind="sketch_profile",
-        params={"columns": ["score"], "store_path": store_path, "fanin": 4},
+        params={"columns": ["score"], "store_path": store_path},
     )
     for _ in range(2):
         suite = ValidationSuite(
@@ -628,7 +668,7 @@ def test_whole_table_kinds_match_verdict_framing(spark):
         "sd": {"order_col": "ts", "value_col": "a"},
         "md": {"lhs": [ColumnMatch("equality", "grp", "grp", 1.0)],
                "rhs": ColumnMatch("equality", "status", "status", 1.0)},
-        "sketch_profile": {"columns": ["a"], "fanin": 4},
+        "sketch_profile": {"columns": ["a"]},
         "schema": {"columns": [{"name": "doc_id", "dtype": "string"}]},
         "assoc": {"col_a": "grp", "col_b": "status"},
         "reconcile": {"child_df": docs.select("doc_id", "a"),
@@ -765,3 +805,51 @@ def test_unpersist_releases_the_runs_fused_pass(spark):
     assert len(ours) == 2  # the canonical frame and the fused pass
     suite.unpersist()
     assert not ours & persisted()
+
+
+def test_unpersist_releases_recorded_verdicts(spark, tmp_path):
+    """A checkpointed run local-checkpoints each recorded verdict frame;
+    ``unpersist`` releases those blocks with the canonical cache and the
+    fused pass. (Persisted RDDs of earlier tests may be cleaned meanwhile, so
+    the check is that none is left beyond the pre-run set.)"""
+    sc = spark.sparkContext
+
+    def persisted() -> set[int]:
+        return set(sc._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    suite = ValidationSuite(
+        spark, fixtures.docs_spark_df(spark, 100), num_partitions=4,
+        checkpoint_path=str(tmp_path / "m"),
+    )
+    out = suite.run(
+        [
+            CheckSpec(name="ucc_doc_id", kind="ucc", params={"columns": ["doc_id"]}),
+            CheckSpec(name="spans_ok", kind="span_integrity"),
+        ]
+    )
+    assert all(v.count() == 4 for v in out.values())
+    assert persisted() - before
+    suite.unpersist()
+    assert persisted() <= before
+
+
+def test_record_costs_one_job(spark, tmp_path):
+    """Recording a verdict frame is its manifest write alone: the write fills
+    the lazy local checkpoint that the returned frame then reads."""
+    suite = ValidationSuite(
+        spark, fixtures.docs_spark_df(spark, 100), num_partitions=4,
+        checkpoint_path=str(tmp_path / "m"),
+    )
+    verdicts = spark.range(4).select(
+        F.col("id").cast("int").alias("partition_id"), F.lit(True).alias("holds")
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("record_audit", "audit")
+    try:
+        out = suite._record("c", verdicts)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("record_audit")) == 1
+    assert sorted(r.partition_id for r in out.collect()) == [0, 1, 2, 3]
+    suite.unpersist()

@@ -94,9 +94,9 @@ def test_kll_ks_drift_matches_exact_ks(spark):
     assert drift["drift_detected"] and drift["ks_stat"] > 0.15
     # cross-run comparison path: persist/reload one side
     from pyspark_validator.checks.drift import kll_ks_compare
-    from pyspark_validator.sketches import KLL
+    from pyspark_validator.sketches import KllImage
 
-    reloaded = KLL.from_bytes(drift["sketch_b"].to_bytes())
+    reloaded = KllImage.from_bytes(drift["sketch_b"].to_bytes())
     again = kll_ks_compare(reloaded, drift["sketch_c"])
     assert abs(again["ks_stat"] - drift["ks_stat"]) < 1e-12
 

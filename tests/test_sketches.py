@@ -1,4 +1,5 @@
-"""Sketch layer: HLL accuracy/mergeability/register-inclusion, CMS estimates."""
+"""Sketch layer: FAIDA HLL accuracy/mergeability/register-inclusion, native
+Count-Min and KLL images, and the one-aggregation column profile."""
 
 import numpy as np
 import pytest
@@ -57,47 +58,54 @@ def test_cms_estimates(spark):
     assert all(e >= 500 for e in ests)
     assert max(ests) >= 5000
     assert max(ests) <= 5000 + 2 * len(vals) // 4096 + 10
+    # the native image has exactly the requested depth x width
+    jcms = spark._jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom(c.to_bytes())
+    assert (jcms.depth(), jcms.width()) == (5, 4096)
 
 
 # ---------------------------------------------------------------------------
 # KLL quantile sketch
 
 
-def test_kll_accuracy_and_roundtrip():
+def test_kll_accuracy_and_roundtrip(spark):
     import numpy as np
+    import pandas as pd
 
-    from pyspark_validator.sketches import KLL
+    from pyspark_validator.sketches import KllImage, kll_sketch
 
     rng = np.random.RandomState(7)
     data = rng.normal(100, 15, 200_000)
-    sk = KLL.empty(200)
-    for chunk in np.array_split(data, 40):
-        sk.update_batch(chunk)
+    df = spark.createDataFrame(pd.DataFrame({"v": data})).repartition(40)
+    sk = kll_sketch(df, "v", k=200)
     assert sk.n == len(data)
-    assert sum(len(b) for b in sk.levels) < 5 * 200  # O(k) space
-    for q in (0.01, 0.25, 0.5, 0.75, 0.99):
-        est = sk.quantile(q)
+    assert len(sk.to_bytes()) < 5 * 200 * 8  # O(k) space: < 5k retained doubles
+    qs = [0.01, 0.25, 0.5, 0.75, 0.99]
+    for q, est in zip(qs, sk.quantiles(qs)):
         assert abs((data <= est).mean() - q) < 0.02  # rank error << 1/k bound
-    r = KLL.from_bytes(sk.to_bytes())
-    assert r.n == sk.n and r.quantile(0.5) == sk.quantile(0.5)
+    r = KllImage.from_bytes(sk.to_bytes())
+    assert r.n == sk.n and r.quantiles([0.5]) == sk.quantiles([0.5])
 
 
-def test_kll_merge_matches_single_sketch():
+def test_kll_merge_matches_single_sketch(spark, tmp_path):
+    """Seven per-snapshot KLLs (k=128) merged by the SketchStore keep the
+    single-sketch rank error over their union."""
     import numpy as np
+    import pandas as pd
 
-    from pyspark_validator.sketches import KLL
+    from pyspark_validator.checkpoint import SketchStore
+    from pyspark_validator.sketches import sketch_profile
 
     rng = np.random.RandomState(11)
     data = rng.exponential(10, 100_000)
     parts = np.array_split(data, 7)
-    merged = KLL.empty(128)
-    for p in parts:
-        s = KLL.empty(128)
-        s.update_batch(p)
-        merged = merged.merge(s)
+    store = SketchStore(spark, str(tmp_path / "sketches"))
+    for i, p in enumerate(parts):
+        part = spark.createDataFrame(pd.DataFrame({"x": p}))
+        store.record(f"s{i}", sketch_profile(part, ["x"], kll_k=128))
+    merged = store.merged([f"s{i}" for i in range(len(parts))])["x"].kll
     assert merged.n == len(data)
-    for q in (0.1, 0.5, 0.9):
-        est = merged.quantile(q)
+    qs = [0.1, 0.5, 0.9]
+    for q, est in zip(qs, merged.quantiles(qs)):
         assert abs((data <= est).mean() - q) < 0.03
 
 
@@ -110,8 +118,7 @@ def test_kll_sketch_spark_builder(spark):
         r.value for r in ev.select("value").dropna().collect()
     )
     assert sk.n == len(exact)
-    for q in (0.25, 0.5, 0.75):
-        est = sk.quantile(q)
+    for q, est in zip((0.25, 0.5, 0.75), sk.quantiles([0.25, 0.5, 0.75])):
         # rank of the estimate within the exact data
         import bisect
 
@@ -132,17 +139,17 @@ def test_sketch_profile_one_pass_matches_exact(spark):
         (i % 37, f"cat_{i % 5}" if i % 10 else None, float(i)) for i in range(2000)
     ]
     df = spark.createDataFrame(rows, ["k", "cat", "x"]).repartition(8)
-    prof = sketch_profile(df, ["k", "cat", "x"], fanin=4)
+    prof = sketch_profile(df, ["k", "cat", "x"])
 
     assert set(prof) == {"k", "cat", "x"}
     # exact counts
     assert prof["k"].n == 2000 and prof["k"].n_null == 0
     assert prof["cat"].n_null == 200
-    # HLL: small-range regime is near-exact, and the one-pass registers must
-    # equal the standalone builder's (max-merge is order-independent)
+    # HLL: small-range regime is near-exact, and the native estimate must
+    # agree with the standalone register-exposed builder's
     assert prof["k"].distinct_est() == pytest.approx(37, abs=1)
     solo = hll_sketch(df.where("k is not null"), ["k"])
-    assert np.array_equal(prof["k"].hll.registers, solo.registers)
+    assert prof["k"].distinct_est() == pytest.approx(solo.cardinality(), abs=1)
     # KLL quantiles vs numpy (k=200 over n=2000 -> tight)
     xs = np.array([r[2] for r in rows])
     q = prof["x"].quantiles([0.25, 0.5, 0.75])
@@ -157,10 +164,30 @@ def test_sketch_profile_one_pass_matches_exact(spark):
     assert all(v >= 200 for v in hh.values())
 
 
-def test_sketch_profile_plan_one_scan_two_exchanges(spark, tmp_path):
+def test_sketch_profile_kll_only_for_double_castable_types(spark):
+    """Timestamps and decimals get a KLL; an interval or timestamp_ntz
+    column (no cast to double) is profiled without one instead of failing."""
+    from pyspark_validator.sketches import sketch_profile
+
+    df = spark.sql(
+        "SELECT make_dt_interval(0, 0, 0, id) AS iv,"
+        " CAST(TIMESTAMP'2024-01-01 00:00:00' AS TIMESTAMP_NTZ) AS tsn,"
+        " TIMESTAMP'2024-01-01 00:00:00' + make_dt_interval(0, 0, 0, id) AS ts,"
+        " CAST(id AS DECIMAL(10, 2)) AS dec FROM range(10)"
+    )
+    prof = sketch_profile(df, ["iv", "tsn", "ts", "dec"])
+    assert {c: prof[c].kll is not None for c in prof} == {
+        "iv": False, "tsn": False, "ts": True, "dec": True,
+    }
+    assert prof["iv"].distinct_est() == 10 and prof["tsn"].distinct_est() == 1
+
+
+def test_sketch_profile_plan_one_scan_no_python(spark, tmp_path):
+    """The profile is one JVM aggregation: one scan of the input and no
+    Python evaluation node in the executed plan."""
     import re
 
-    from pyspark_validator.sketches import _sketch_profile_frame
+    from pyspark_validator.sketches import _profile_aggregate
 
     path = str(tmp_path / "t.parquet")
     spark.range(0, 1000, 1, 4).selectExpr(
@@ -168,12 +195,18 @@ def test_sketch_profile_plan_one_scan_two_exchanges(spark, tmp_path):
     ).write.parquet(path)
     df = spark.read.parquet(path)
 
-    final, _ = _sketch_profile_frame(df, ["k", "cat"], fanin=4)
-    p = final._sc._jvm.PythonSQLUtils.explainString(
-        final._jdf.queryExecution(), "formatted"
+    agg = _profile_aggregate(df, ["k", "cat"], p=12, kll_k=200, cms_depth=5, cms_width=8192)
+    agg.collect()
+    p = agg._sc._jvm.PythonSQLUtils.explainString(
+        agg._jdf.queryExecution(), "formatted"
     )
-    assert len(re.findall(r"^\(\d+\) Scan parquet", p, re.M)) == 1
-    assert len(re.findall(r"^\(\d+\) Exchange", p, re.M)) == 2
+    # the final plan's tree; the AQE "Initial Plan" section repeats every node
+    final = p.split("Initial Plan")[0]
+    assert "isFinalPlan=true" in p or "Final Plan" in final
+    assert len(re.findall(r"\bScan parquet\b", final)) == 1
+    assert not re.search(
+        r"MapInPandas|FlatMapGroupsInPandas|ArrowEvalPython|BatchEvalPython", p
+    )
 
 
 def test_hll_column_sketches_one_pass_matches_per_column(spark):
