@@ -8260,139 +8260,8 @@ def _query_fns() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
 
 
-# ---------------------------------------------------------------------------
-# Driver-window rotation policy
-#
-# The round driver validates only the FIRST ~50 entries of queries() against
-# oracle_sql() (rows + schema + value-hash), so dict ordering silently decides
-# which operators ever earn a driver-green CORRECTNESS row.  Policy (round 4):
-#   * _driver_green() is DERIVED at call time from the committed
-#     CORRECTNESS_r*.json files — every query whose latest row is 3-green
-#     (rows_match & schema_match & hash_match) rotates to the BACK.  Deriving
-#     (rather than hand-maintaining a frozenset) means the rotation can never
-#     go stale between rounds: as soon as a round's CORRECTNESS file lands,
-#     its greens rotate out and the never-checked tail fronts automatically.
-#   * Never-green queries front in build order; NEW queries (absent from every
-#     CORRECTNESS file) are by construction never-green and therefore front.
-# scripts/driver_compare.py sweeps ALL entries regardless of order, so nothing
-# rotated out of the window goes unvalidated in-repo.
-# ---------------------------------------------------------------------------
-
-
-# Snapshot of the 3-green union as of CORRECTNESS_r03 — used ONLY when no
-# CORRECTNESS_r*.json is readable next to this file (e.g. the file was
-# shipped to a staging dir without them). Without this fallback an absent
-# file set would silently reset the rotation to build order, re-fronting
-# already-green queries. Files, when present, always win.
-_GREEN_FALLBACK = frozenset({
-    "ucc_lineitem_pk", "ucc_violations_orders", "ucc_docs_doc_id",
-    "fd_docs_span_seq", "fd_holds_nation", "fd_highlights_orders",
-    "afd_measures_orders", "pfd_lineitem", "ind_orders_customer",
-    "ind_violations_customer_orders", "ind_binary_nation_region", "nd_orders",
-    "stats_numeric_lineitem", "stats_string_customer", "stats_string_extras",
-    "stats_char_customer", "topk_event_types", "entropy_gini_events",
-    "monotonic_events_ts", "sessionize_events", "drift_categorical_events",
-    "drift_numeric_events", "drift_numeric_by_type", "drift_docs_kind",
-    "text_token_counts", "text_language_id", "text_quality", "text_lm_quality",
-    "containment_planted", "dedup_exact_planted", "dedup_snm_docs",
-    "dedup_keep_one", "cc_clusters_planted", "cc_keep_best_planted",
-    "ngram_jaccard_planted", "prefix_jaccard_planted", "minhash_lsh_planted",
-    "dedup_delta_minhash", "simhash_planted", "similarity_brute_topk",
-    "similarity_ivf_topk", "embedding_cosine_dups", "knn_join_embeddings",
-    "embedding_conformance_planted", "embedding_violations_planted",
-    "stats_deviation_lineitem", "pac_events_value", "mfd_quantity_orderkey",
-    "mfd_levenshtein_nation", "sd_events_gap",
-    "dc_orders_price_inversion",
-    "aod_removal_rows_orders", "md_nation_name", "md_orders_customer",
-    "incremental_ucc_delta", "ac_ranges_lineitem", "ac_exceptions_lineitem",
-    "nar_orders_priority", "sfd_orders_priority_status", "fused_suite_orders",
-    "fused_distinct_customer", "incremental_fused_delta",
-    "discovery_unary_fds_nation", "discovery_unary_inds_keys",
-    "discovery_fds_orders", "discovery_afds_orders", "discovery_ainds_keys",
-    "discovery_uccs_lineitem", "discovery_binary_inds_keys",
-    "discovery_ars_events", "discovery_cfds_orders", "discovery_ods_lineitem",
-    "discovery_pfds_orders", "discovery_afds_tane_orders",
-    "discovery_dds_lineitem", "discovery_mds_orders",
-    "discovery_list_ods_orders", "discovery_cinds_orders",
-    "discovery_nary_inds_orders", "kanon_customer", "benford_lineitem",
-    "assoc_orders", "drift_js_events", "drift_wasserstein_events", "zipf_docs",
-    "format_conformance_customer", "format_profile_part",
-    "null_patterns_events", "drift_vocab_docs", "precedence_events",
-    "interval_overlap_orders", "reconcile_orders_lineitem",
-    "class_balance_events", "caption_consistency_docs", "drift_topk_events",
-    "drift_embedding_dims", "outliers_events_value", "outliers_events_rows",
-    "embedding_outliers_topk", "change_point_events", "schema_verdict_docs",
-})
-
-
-def _driver_green() -> frozenset:
-    import glob as _glob
-    import json as _json
-    import os as _os
-
-    import re as _re
-
-    here = _os.path.dirname(_os.path.abspath(__file__))
-    green: set[str] = set()
-    n_files_read = 0
-
-    def _round_no(p: str) -> tuple[int, str]:
-        # chronological order = parsed round number, NOT lexicographic path
-        # order (r100 would sort before r2 as a raw string); unparseable
-        # names sort first so any real round overrides them.
-        m = _re.search(r"CORRECTNESS_r(\d+)\.json$", p)
-        return (int(m.group(1)) if m else -1, p)
-
-    for path in sorted(
-        _glob.glob(_os.path.join(here, "CORRECTNESS_r*.json")), key=_round_no
-    ):
-        try:
-            with open(path) as fh:
-                rows = _json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        n_files_read += 1
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            if (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            ):
-                green.add(name)
-            else:
-                # a later non-green row (regression) re-fronts the query
-                green.discard(name)
-    if n_files_read == 0:
-        return _GREEN_FALLBACK
-    return frozenset(green)
-
-
-# Queries the round-3 judge independently re-ran 3-green via driver_compare.py
-# (VERDICT.md round 3, "judge-r3").  When the never-green set exceeds the
-# driver's ~50-query window, these sort LAST within it so whatever falls off
-# the window already has independent evidence.
-_JUDGE_CHECKED = frozenset({
-    "dedup_lines_docs", "dedup_delta_dup_spans_docs", "dedup_layout_docs",
-    "semantic_dedup_ivf_planted", "curation_contam_fraction",
-    "curation_decontam_semantic", "curation_shuffle_shards",
-    "curation_token_budget_docs", "curation_chunk_manifest",
-    "text_repetition_docs", "retrieval_bm25_docs", "caption_pairs_docs",
-    "interleaved_chunk_docs", "normalize_interleaved_docs",
-    "media_context_census_docs", "spans_flatten_sentinels",
-})
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    fns = _query_fns()
-    green = _driver_green()
-    never_checked = [n for n in fns if n not in green]
-    never_checked.sort(key=lambda n: n in _JUDGE_CHECKED)  # stable
-    already_green = [n for n in fns if n in green]
-    return {n: fns[n] for n in never_checked + already_green}
+    return _query_fns()
 
 
 def oracle_sql() -> dict[str, str]:

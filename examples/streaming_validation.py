@@ -58,8 +58,8 @@ engine.verdicts().filter(~F.col("holds")).show()
 
 # ---- a whole SUITE of agg-shaped checks live on the same stream ------------
 # (fused engine: one delta-sized agg per micro-batch maintains k checks;
-# periodic state.vacuum() keeps the versioned state from accumulating a
-# directory per batch)
+# a periodic compact() folds the state's batch-per-micro-batch log into one
+# base)
 from pyspark_validator.fused import FusedPass, IncrementalFused
 from pyspark_validator.streaming import attach_incremental_fused
 
@@ -94,7 +94,7 @@ fq = (
     .start()
 )
 fq.awaitTermination(300)
-feng.state.vacuum(keep_last=1)  # retain only the live snapshot's files
+feng.compact()  # one base; the superseded batches are deleted
 print("fused final (uniqueness gate at 0.95):")
 feng.verdict("doc_id_uniq").orderBy("partition_id").show(4)
 

@@ -10,13 +10,20 @@ snapshot_id is the source table's snapshot id). Resume reads the manifest once p
 run into a driver-side {check_id -> {partition_id -> status}} map (``recorded``:
 one filtered collect of P rows per check) and cuts the pending work with a literal
 ``partition_id IN (...)`` list, so a check with nothing pending costs no Spark job.
+
+All three stores -- this manifest, ``SketchStore`` and the incremental engines'
+state -- are batch logs (``BatchLog``, ``StateLog``): a batch is one Spark write
+into a fresh directory, published by the Hadoop job commit and never modified
+afterwards, and a read is the union of the committed batches.
 """
 
 from __future__ import annotations
 
 import time
 import uuid
+from typing import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -34,6 +41,147 @@ MANIFEST_SCHEMA = T.StructType(
 )
 
 
+class BatchLog:
+    """Append-only log of parquet batches under one root, on any Hadoop path.
+
+    ``append`` writes one batch into a fresh ``batch-<uuid>`` directory
+    instead of ``mode("append")`` on the root: two concurrent writers (or a
+    cluster retry racing its zombie predecessor) would otherwise share one
+    ``_temporary`` staging dir, and the first job commit can delete the
+    other's uncommitted task files. Disjoint directories make concurrent
+    appends conflict-free with no lock, and a writer killed mid-job leaves
+    only its own batch dir's ``_temporary``, which every reader ignores.
+
+    ``read`` is the union of every batch (``recursiveFileLookup``: the
+    batch dirs carry no key=value layout). ``ignoreCorruptFiles``: a writer
+    killed mid-commit can leave a torn part-file; the manifest's rows are
+    redundant completion facts, so dropping a torn file merely re-queues
+    those partitions on resume -- strictly safer than poisoning every future
+    read (the lazy read would otherwise throw at execution time, on every
+    resume forever). A missing root reads as an empty frame."""
+
+    def __init__(
+        self, spark: SparkSession, path: str, schema: T.StructType | None
+    ):
+        self.spark = spark
+        self.path = path
+        self.schema = schema
+
+    def _reader(self):
+        reader = self.spark.read.option("ignoreCorruptFiles", "true")
+        return reader if self.schema is None else reader.schema(self.schema)
+
+    def append(self, df: DataFrame) -> None:
+        df.write.parquet(f"{self.path}/batch-{uuid.uuid4().hex[:16]}")
+
+    def read(self) -> DataFrame:
+        try:
+            return self._reader().option("recursiveFileLookup", "true").parquet(
+                self.path
+            )
+        except Exception:
+            return self.spark.createDataFrame([], self.schema)
+
+
+class StateLog(BatchLog):
+    """The incremental engines' state: a ``BatchLog`` whose batches are
+    ordered, partitioned by ``partition_id`` and folded on read.
+
+    Layout: ``batch=<seq>-<base|delta>/partition_id=<p>/part-*.parquet``.
+    ``seq`` is one more than the highest on disk, so ids sort in commit
+    order (one writer per state). A batch is committed once its Hadoop job
+    commit wrote ``_SUCCESS``. The state is the newest committed base plus
+    the committed batches after it; the caller folds those rows (sums of
+    signed counts, merges of partials). ``compact`` writes that fold as a new
+    base and only then deletes the batches it supersedes, so a kill at any
+    point leaves either the old state or the new one, never a double count.
+    ``read(partition_ids)`` is a partition filter on the ``partition_id``
+    directories: no other partition's files are opened.
+
+    ``empty`` types a read of a state that holds no data file at all. The
+    schema of the last batch written or read is kept, so later reads infer
+    nothing."""
+
+    def __init__(self, spark: SparkSession, path: str, empty: T.StructType):
+        super().__init__(spark, path, None)
+        self.empty = empty
+
+    def _fs_path(self, rel: str):
+        """(Hadoop FileSystem, Path) of ``rel`` under the root."""
+        path = self.spark._jvm.org.apache.hadoop.fs.Path(f"{self.path}/{rel}")
+        return path.getFileSystem(self.spark._jsc.hadoopConfiguration()), path
+
+    def _glob(self, pattern: str) -> list:
+        """Hadoop paths under the root matching ``pattern`` (one glob)."""
+        fs, path = self._fs_path(pattern)
+        return [st.getPath() for st in fs.globStatus(path) or []]
+
+    def _ids(self, committed: bool) -> list[str]:
+        """Sorted batch ids on disk; with ``committed`` only those whose job
+        commit finished."""
+        paths = (
+            [p.getParent() for p in self._glob("batch=*/_SUCCESS")]
+            if committed
+            else self._glob("batch=*")
+        )
+        return sorted(p.getName().split("=", 1)[1] for p in paths)
+
+    def live_batches(self) -> list[str]:
+        """Ids of the newest committed base and of the committed batches
+        after it; empty while no base has committed."""
+        ids = self._ids(committed=True)
+        bases = [i for i in ids if i.endswith("-base")]
+        return [i for i in ids if i >= bases[-1]] if bases else []
+
+    def append(self, df: DataFrame, base: bool = False) -> list[int]:
+        """Write ``df`` as the next batch (``base``: a full state that
+        supersedes every earlier batch); returns the partition ids it holds,
+        from one listing of the new directory."""
+        ids = self._ids(committed=False)
+        seq = int(ids[-1].split("-")[0]) + 1 if ids else 0
+        batch = f"batch={seq:012d}-{'base' if base else 'delta'}"
+        df.write.partitionBy("partition_id").parquet(f"{self.path}/{batch}")
+        self.schema = T.StructType(
+            [*df.schema.fields, T.StructField("batch", T.StringType())]
+        )
+        return sorted(
+            int(p.getName().split("=", 1)[1])
+            for p in self._glob(f"{batch}/partition_id=*")
+        )
+
+    def read(self, partition_ids: list[int] | None = None) -> DataFrame:
+        """The live batches' rows, unfolded; only ``partition_ids``' files
+        when given."""
+        live = self.live_batches()
+        if not live:
+            raise ValueError(f"no state at {self.path}; call initialize() first")
+        try:
+            df = self._reader().parquet(self.path)
+        except AnalysisException:  # no data file to infer the schema from
+            return self.spark.createDataFrame([], self.empty)
+        self.schema = df.schema
+        df = df.where(F.col("batch").isin(live))
+        if partition_ids is not None:
+            df = df.where(F.col("partition_id").isin(partition_ids))
+        return df.drop("batch")
+
+    def compact(self, fold: Callable[[DataFrame], DataFrame]) -> None:
+        """Fold the live batches into a new base (``fold`` maps the unfolded
+        rows to the state), then delete every batch before it. A state that
+        is only its base writes nothing; one without a base is left as is."""
+        live = self.live_batches()
+        if len(live) > 1:
+            self.append(fold(self.read()), base=True)
+            live = self.live_batches()
+        for batch in self._ids(committed=False):
+            if live and batch < live[0]:
+                self._delete(batch)
+
+    def _delete(self, batch: str) -> None:
+        fs, path = self._fs_path(f"batch={batch}")
+        fs.delete(path, True)
+
+
 class CheckpointManager:
     """Append-only per-partition lineage manifest."""
 
@@ -41,26 +189,10 @@ class CheckpointManager:
         self.spark = spark
         self.path = path
         self.run_id = run_id or uuid.uuid4().hex[:12]
+        self.log = BatchLog(spark, path, MANIFEST_SCHEMA)
 
     def manifest(self) -> DataFrame:
-        # recursiveFileLookup: appends land in per-write batch subdirectories
-        # (see record_verdicts) so concurrent writers never share a path; the
-        # reader flattens them (no partition inference -- the manifest has no
-        # key=value layout). ignoreCorruptFiles: a writer killed mid-commit
-        # can leave a torn part-file; manifest rows are redundant completion
-        # facts, so dropping a torn file merely re-queues those partitions on
-        # resume -- strictly safer than poisoning every future manifest read
-        # (the lazy read would otherwise throw at EXECUTION time, outside
-        # this try/except, on every resume forever).
-        try:
-            return (
-                self.spark.read.schema(MANIFEST_SCHEMA)
-                .option("recursiveFileLookup", "true")
-                .option("ignoreCorruptFiles", "true")
-                .parquet(self.path)
-            )
-        except Exception:
-            return self.spark.createDataFrame([], MANIFEST_SCHEMA)
+        return self.log.read()
 
     def recorded(
         self, snapshot_id: str, check_ids: list[str]
@@ -123,17 +255,7 @@ class CheckpointManager:
             ),
             F.lit(time.time()).alias("completed_at"),
         )
-        # Unique batch subdirectory per append instead of mode("append") on
-        # the root: two concurrent suite runs (or a cluster retry racing its
-        # zombie predecessor) otherwise share one _temporary staging dir, and
-        # the first job commit can delete the other's uncommitted task files.
-        # Disjoint directories make concurrent appends conflict-free with NO
-        # lock: the manifest's merge semantics are pure union (append-only
-        # completion facts; metric_history already resolves re-validated
-        # partitions by latest completed_at -- documented last-wins). A
-        # writer crashing mid-job leaves only its own batch dir's _temporary,
-        # which every reader ignores.
-        out.write.parquet(f"{self.path}/batch-{uuid.uuid4().hex[:16]}")
+        self.log.append(out)
 
     # ---- cross-snapshot monitoring over the recorded lineage ---------------
     #
@@ -278,18 +400,7 @@ class SketchStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-
-    def _frame(self) -> DataFrame:
-        # same crash/concurrency contract as CheckpointManager.manifest
-        try:
-            return (
-                self.spark.read.schema(SKETCH_SCHEMA)
-                .option("recursiveFileLookup", "true")
-                .option("ignoreCorruptFiles", "true")
-                .parquet(self.path)
-            )
-        except Exception:
-            return self.spark.createDataFrame([], SKETCH_SCHEMA)
+        self.log = BatchLog(spark, path, SKETCH_SCHEMA)
 
     def record(self, snapshot_id: str, profiles: dict) -> None:
         rows = [
@@ -309,15 +420,13 @@ class SketchStore:
             )
             for c, s in profiles.items()
         ]
-        self.spark.createDataFrame(rows, SKETCH_SCHEMA).write.parquet(
-            f"{self.path}/batch-{uuid.uuid4().hex[:16]}"
-        )
+        self.log.append(self.spark.createDataFrame(rows, SKETCH_SCHEMA))
 
     def _latest(self, snapshot_ids: list[str], column: str | None = None) -> dict:
         """{(snapshot_id, column) -> ColumnSketches} from the latest record
         of each, in one Spark job."""
         ok = _current_format()
-        stored = self._frame().filter(F.col("snapshot_id").isin(snapshot_ids))
+        stored = self.log.read().filter(F.col("snapshot_id").isin(snapshot_ids))
         if column is not None:
             stored = stored.filter(F.col("column") == column)
         rows = stored.select(
@@ -347,7 +456,7 @@ class SketchStore:
         equals profiling the union -- at delta cost."""
         from pyspark_validator.sketches import merge_count_min
 
-        stored = self._frame().filter(F.col("snapshot_id").isin(snapshot_ids))
+        stored = self.log.read().filter(F.col("snapshot_id").isin(snapshot_ids))
         ok = _current_format()
         hll = F.hll_union_agg(F.when(ok, F.col("hll")))
         kll = F.kll_merge_agg_double(F.when(ok, F.col("kll")))

@@ -1648,8 +1648,8 @@ class AfdMetricCalculator(_Verifier):
 class DynamicFdVerifier(_Verifier):
     """DynamicFDVerifier analog (bind_dynamic_fd_verification.cpp: fd_holds,
     get_error, get_num_error_clusters, get_highlights). load_data seeds the
-    versioned count state (dynamic_position_list_index.h:32-34 cluster-map
-    semantics); each execute() folds an insert/delete/update delta batch and
+    count-state log (dynamic_position_list_index.h:32-34 cluster-map
+    semantics); each execute() appends an insert/delete/update delta batch and
     the getters read the rolled-up state without rescanning the base table.
     Updates are (old_rows, new_rows) -- the reference's row-id updates reduce
     to delete-old + insert-new at the value level."""
@@ -1728,7 +1728,7 @@ class DynamicFdVerifier(_Verifier):
         num_distinct_rhs_values, largest first, capped."""
         from pyspark.sql import functions as F
 
-        s = self._inc.state.read()
+        s = self._inc.counts()
         x_level = s.groupBy(*self._inc.lhs).agg(
             F.sum("ycnt").alias("cluster_size"),
             F.count(F.lit(1)).alias("num_distinct_rhs_values"),

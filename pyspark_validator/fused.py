@@ -960,15 +960,15 @@ class IncrementalFused:
     Because every fused aggregate is algebraically mergeable (sum/min/max --
     see ``_Member.merges``), an append-only delta's partials fold into the
     stored per-partition state: verdicts over a 10^12-row table refresh at
-    DELTA cost, rescanning nothing. State lives in the same versioned,
-    manifest-referenced partition layout as incremental.py (touched
-    ``partition_id=`` dirs are rewritten, untouched files carried by
-    reference), so a stream of snapshots costs O(delta + touched partitions)
-    per update.
+    DELTA cost, rescanning nothing. State is the same append-only log as
+    incremental.py (``checkpoint.StateLog``): ``initialize`` appends the base
+    partials, ``apply_delta`` appends only the delta's partials, and a read
+    merges the live batches of the requested partitions with
+    ``_merge_exprs()``; ``compact`` folds the log into a new base.
 
     Deletions are supported exactly where the algebra allows: members whose
     partials merge purely by ``sum`` (nar, ac, row_predicate, completeness,
-    histogram_drift, type_conformance, span_integrity) retract by folding a
+    histogram_drift, type_conformance, span_integrity) retract by appending a
     NEGATED delete-partial; min/max
     (numeric_profile) and HLL sketches (distinct) are not retractable, so
     ``apply_delta(deletes=...)`` refuses when such a member is registered --
@@ -979,18 +979,20 @@ class IncrementalFused:
     """
 
     def __init__(self, fp: FusedPass, state_path: str):
-        from pyspark_validator.incremental import _IncrementalState
+        from pyspark_validator.checkpoint import StateLog
 
         self.fp = fp
-        self.state = _IncrementalState(fp.df.sparkSession, state_path)
+        self.state = StateLog(
+            fp.df.sparkSession, state_path, self._partial(fp.df).schema
+        )
 
     def _partial(self, df: DataFrame) -> DataFrame:
         return self.fp._aggregate(df)
 
-    def initialize(self, df: DataFrame | None = None) -> int:
+    def initialize(self, df: DataFrame | None = None) -> None:
         """Full pass over the base table (the one unavoidable scan)."""
         base = df if df is not None else self.fp.df
-        return self.state.write_full(self._partial(base))
+        self.state.append(self._partial(base), base=True)
 
     def _merge_exprs(self) -> list[Column]:
         fns = {"sum": F.sum, "min": F.min, "max": F.max,
@@ -1001,13 +1003,16 @@ class IncrementalFused:
             for alias, op in m.merges.items()
         ]
 
+    def _fold(self, partials: DataFrame) -> DataFrame:
+        return partials.groupBy("partition_id").agg(*self._merge_exprs())
+
     def apply_delta(
         self,
         inserts: DataFrame | None = None,
         deletes: DataFrame | None = None,
     ) -> list[int]:
-        """Fold a delta batch into the state; only partitions the batch
-        touches are read back and rewritten. Returns the touched partition
+        """Append a delta batch's partials (one agg job over the delta;
+        nothing stored is read or rewritten). Returns the touched partition
         ids (pass them to ``verdicts`` for the refreshed slice)."""
         if inserts is None and deletes is None:
             raise ValueError("apply_delta needs inserts and/or deletes")
@@ -1040,25 +1045,14 @@ class IncrementalFused:
         partial = parts[0]
         for p in parts[1:]:
             partial = partial.unionByName(p)
-        # one agg job over the delta; materialized because it is read twice
-        # (touched-pid list + merge) and is at most 2P rows
-        partial = partial.localCheckpoint(eager=True)
-        touched = sorted(
-            {r.partition_id for r in partial.select("partition_id").collect()}
-        )
-        if not touched:
-            return []
-        merged = (
-            self.state.read(touched)
-            .unionByName(partial)
-            .groupBy("partition_id")
-            .agg(*self._merge_exprs())
-        )
-        self.state.write_delta(merged, touched)
-        return touched
+        return self.state.append(partial)
+
+    def compact(self) -> None:
+        """Fold the log into one new base (see ``StateLog.compact``)."""
+        self.state.compact(self._fold)
 
     def grouped(self, partition_ids: list[int] | None = None) -> DataFrame:
-        return self.state.read(partition_ids)
+        return self._fold(self.state.read(partition_ids))
 
     def verdict(
         self, name: str, partition_ids: list[int] | None = None

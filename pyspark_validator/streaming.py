@@ -6,8 +6,9 @@ see SURVEY.md section 2.8. This module lifts the incremental count-state engine
 (incremental.py) into Structured Streaming two ways:
 
   * ``attach_incremental`` -- readStream -> foreachBatch(apply_delta): every
-    micro-batch is an insert delta; the versioned state advances per batch and
-    per-partition verdicts for TOUCHED partitions are appended to a verdict sink.
+    micro-batch is an insert delta appended to the state log as one batch of
+    signed counts, and per-partition verdicts for TOUCHED partitions are
+    handed to a verdict callback.
     This is exactly the "dynamic verifier" loop, with Spark's checkpointLocation
     giving exactly-once batch replay on restart.
   * ``streaming_violation_counts`` -- a pure Structured Streaming aggregation:
@@ -73,7 +74,7 @@ def attach_incremental(
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        if engine.state.current_version() < 0:
+        if not engine.state.live_batches():
             engine.initialize(batch_df)
             verdicts = engine.verdicts()
         else:
@@ -107,7 +108,7 @@ def attach_incremental_fused(
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        if engine.state.current_version() < 0:
+        if not engine.state.live_batches():
             engine.initialize(batch_df)
             touched = None  # every stored partition is from this batch
         else:

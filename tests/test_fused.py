@@ -300,9 +300,10 @@ def _fp_for(df):
 def test_incremental_fused_equals_batch(spark, orders, tmp_path):
     """IncrementalFused law: initialize(base) + apply_delta(d1) +
     apply_delta(d2) == one batch FusedPass over base ∪ d1 ∪ d2, for every
-    member kind (sum, min, max merges all exercised); untouched partitions'
-    files are carried by reference, not rewritten."""
-    import json as _json
+    member kind (sum, min, max merges all exercised); a delta adds only its
+    own batch, holding only the touched partition, and every existing state
+    file stays byte-identical."""
+    import os
 
     from pyspark_validator.fused import IncrementalFused
 
@@ -314,13 +315,22 @@ def test_incremental_fused_equals_batch(spark, orders, tmp_path):
     ).collect()[0][0]
     d2 = orders.filter(F.col("o_orderkey") == one_key)
 
-    inc = IncrementalFused(_fp_for(base), str(tmp_path / "state"))
+    root = str(tmp_path / "state")
+    inc = IncrementalFused(_fp_for(base), root)
     inc.initialize()
     inc.apply_delta(d1)
-    v_before = inc.state.current_version()
-    man_before = inc.state.manifest()
-    inc.apply_delta(d2)
-    man_after = inc.state.manifest()
+
+    def files():
+        out = {}
+        for d, _, names in os.walk(root):
+            for n in names:
+                with open(os.path.join(d, n), "rb") as f:
+                    out[os.path.relpath(os.path.join(d, n), root)] = f.read()
+        return out
+
+    before = files()
+    touched = inc.apply_delta(d2)
+    after = files()
     touched_pid = (
         d2.select(
             F.pmod(F.xxhash64("o_orderkey"), F.lit(8)).cast("int").alias("p")
@@ -328,10 +338,14 @@ def test_incremental_fused_equals_batch(spark, orders, tmp_path):
         .collect()[0]
         .p
     )
-    assert man_after[str(touched_pid)].startswith(f"v{v_before + 1}/")
-    for pid, rel in man_before.items():
-        if pid != str(touched_pid):
-            assert man_after[pid] == rel  # carried by reference
+    assert touched == [touched_pid]
+    assert {p: after[p] for p in before} == before  # existing files unchanged
+    added = set(after) - set(before)
+    [batch] = {p.split(os.sep)[0] for p in added}  # one new batch
+    assert {os.path.dirname(p) for p in added} == {
+        batch,
+        os.path.join(batch, f"partition_id={touched_pid}"),
+    }
 
     full = _fp_for(base.unionByName(d1).unionByName(d2))
     for name in ("nar_f", "comp_prio", "prof_price", "uniq_key", "drift_price"):

@@ -1,7 +1,11 @@
 """Incremental (dynamic) validation tests: delta batches must produce verdicts
 identical to a full recompute over the post-delta table (the cross-validation
-rule the reference applies between dynamic and static verifiers), and must only
-rewrite touched partitions."""
+rule the reference applies between dynamic and static verifiers), must write
+only the delta, and must survive a kill at any point of an append or a
+compaction."""
+
+import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -62,7 +66,8 @@ def test_incremental_ucc_delta_then_fix(spark, tmp_path):
     # deleting one copy of the dup restores uniqueness everywhere
     inc.apply_delta(deletes=spark.createDataFrame([(3,)], ["k"]))
     assert all(r.holds for r in inc.verdicts().collect())
-    assert inc.state.current_version() == 2
+    live = inc.state.live_batches()
+    assert [b.rsplit("-", 1)[1] for b in live] == ["base", "delta", "delta"]
 
 
 FD_VERDICT_COLS = [
@@ -136,53 +141,55 @@ def test_incremental_fd_afd_measures_track_static(spark, tmp_path):
     )
 
 
-def test_incremental_delta_rewrites_only_touched_partitions(spark, tmp_path):
-    """The scale claim of the incremental engine: a delta must write ONLY the
-    touched partition_id= directories; every untouched partition's files are
-    carried into the new manifest by reference and stay byte-identical."""
-    import json
-    import os
+def _files(root):
+    """{relative path: (mtime, bytes)} of every file under ``root``."""
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            p = os.path.join(d, n)
+            with open(p, "rb") as f:
+                out[os.path.relpath(p, root)] = (os.path.getmtime(p), f.read())
+    return out
 
+
+def _batches(root):
+    return sorted(n for n in os.listdir(root) if n.startswith("batch="))
+
+
+def test_incremental_delta_rewrites_only_touched_partitions(spark, tmp_path):
+    """The scale claim of the incremental engine: a delta adds only its own
+    batch, holding only the touched partition_id= directories; every
+    pre-existing state file stays byte-identical, and a touched-partition
+    read opens only that partition's files (a partition filter)."""
     base = spark.createDataFrame([(i,) for i in range(200)], ["k"])
-    inc = IncrementalUCC(spark, str(tmp_path / "nrw"), ["k"], num_partitions=8)
+    root = str(tmp_path / "nrw")
+    inc = IncrementalUCC(spark, root, ["k"], num_partitions=8)
     inc.initialize(base)
-    st = inc.state
-    man0 = st.manifest()
-    assert len(man0) == 8 and all(rel.startswith("v0/") for rel in man0.values())
-    snapshot = {}
-    for pid, rel in man0.items():
-        d = os.path.join(st.path, rel)
-        snapshot[pid] = {
-            f: (os.path.getmtime(p), os.path.getsize(p), open(p, "rb").read())
-            for f in sorted(os.listdir(d))
-            if f.endswith(".parquet")
-            for p in [os.path.join(d, f)]
-        }
+    [base_batch] = _batches(root)
+    pdirs = [n for n in os.listdir(os.path.join(root, base_batch)) if "=" in n]
+    assert len(pdirs) == 8
+    before = _files(root)
 
     touched_df = inc.apply_delta(inserts=spark.createDataFrame([(7,)], ["k"]))
-    touched = {str(r.partition_id) for r in touched_df.collect()}
+    touched = {r.partition_id for r in touched_df.collect()}
     assert len(touched) == 1
 
-    man1 = st.manifest()
-    # v1 holds only the touched partition; untouched entries are unchanged refs
-    v1 = os.path.join(st.path, "v1")
-    v1_parts = sorted(n for n in os.listdir(v1) if n.startswith("partition_id="))
-    assert v1_parts == [f"partition_id={p}" for p in sorted(touched)]
-    for pid, rel in man1.items():
-        if pid in touched:
-            assert rel.startswith("v1/")
-        else:
-            assert rel == man0[pid]
-            d = os.path.join(st.path, rel)
-            now = {
-                f: (os.path.getmtime(p), os.path.getsize(p), open(p, "rb").read())
-                for f in sorted(os.listdir(d))
-                if f.endswith(".parquet")
-                for p in [os.path.join(d, f)]
-            }
-            assert now == snapshot[pid]
+    after = _files(root)
+    assert {p: after[p] for p in before} == before
+    added = {p.split(os.sep)[0] for p in set(after) - set(before)}
+    [batch] = added
+    assert batch.startswith("batch=") and batch.endswith("-delta")
+    pdirs = [n for n in os.listdir(os.path.join(root, batch)) if "=" in n]
+    assert pdirs == [f"partition_id={p}" for p in touched]
 
-    # verdicts across versions still match a full recompute
+    plan = (
+        inc.state.read(sorted(touched))._jdf.queryExecution().executedPlan().toString()
+    )
+    [scan] = [line for line in plan.splitlines() if "FileScan" in line]
+    assert "PartitionFilters: [" in scan
+    assert "partition_id" in scan.split("PartitionFilters: [", 1)[1]
+
+    # verdicts across batches still match a full recompute
     post = base.unionByName(spark.createDataFrame([(7,)], ["k"]))
     full = ucc_check(post, ["k"], num_partitions=8).verdicts()
     assert _sorted_rows(inc.verdicts(), VERDICT_COLS) == _sorted_rows(
@@ -191,8 +198,8 @@ def test_incremental_delta_rewrites_only_touched_partitions(spark, tmp_path):
 
 
 def test_incremental_delete_all_rows_of_partition(spark, tmp_path):
-    """A touched partition whose rows all delete out drops from the manifest
-    and from verdicts (empty-partition edge of the manifest merge)."""
+    """A touched partition whose rows all delete out drops from the merged
+    state and from verdicts (the zero-sum edge of the merge on read)."""
     base = spark.createDataFrame([(1,), (2,)], ["k"])
     inc = IncrementalUCC(spark, str(tmp_path / "empt"), ["k"], num_partitions=4)
     inc.initialize(base)
@@ -203,36 +210,136 @@ def test_incremental_delete_all_rows_of_partition(spark, tmp_path):
 
 
 def test_state_vacuum_reference_based(spark, tmp_path):
-    """vacuum keeps every file a retained manifest references (even in old
-    version dirs -- carry-by-reference), deletes unreferenced dirs and old
-    manifests, and never changes what read()/verdicts() return."""
-    import os
-
-    from pyspark_validator.incremental import IncrementalUCC
-
-    eng = IncrementalUCC(spark, str(tmp_path / "s"), ["k"], num_partitions=4)
+    """compact() folds the log into one new base: verdicts are unchanged,
+    only the new base remains on disk, later deltas append after it, and
+    compacting an empty (never initialized) state does nothing."""
+    root = str(tmp_path / "s")
+    eng = IncrementalUCC(spark, root, ["k"], num_partitions=4)
     eng.initialize(spark.createDataFrame([(i,) for i in range(20)], ["k"]))
     for i in range(3):  # each delta touches a subset of partitions
         eng.apply_delta(inserts=spark.createDataFrame([(100 + i,)], ["k"]))
+    eng.apply_delta(deletes=spark.createDataFrame([(5,)], ["k"]))
     before = eng.verdicts().orderBy("partition_id").collect()
-    st = eng.state
-    manifests = [f for f in os.listdir(st.path) if f.startswith("manifest_v")]
-    assert len(manifests) == 4
+    assert len(_batches(root)) == 5
 
-    stats = st.vacuum(keep_last=1)
-    assert stats["manifests_deleted"] == 3
-    assert stats["dirs_deleted"] >= 1  # superseded touched-partition dirs
-    after = eng.verdicts().orderBy("partition_id").collect()
-    assert before == after
-    for rel in st.manifest().values():  # every live reference still on disk
-        assert os.path.isdir(os.path.join(st.path, rel))
+    eng.compact()
+    [base] = _batches(root)
+    assert base.endswith("-base")
+    assert eng.state.live_batches() == [base.split("=", 1)[1]]
+    assert eng.verdicts().orderBy("partition_id").collect() == before
+    eng.compact()  # already compact: nothing written or deleted
+    assert _batches(root) == [base]
 
-    # keep_last=2 retains the previous snapshot's manifest for time travel
     eng.apply_delta(inserts=spark.createDataFrame([(200,)], ["k"]))
-    st.vacuum(keep_last=2)
-    assert st.manifest(st.current_version() - 1)
-    # vacuuming an empty state is a no-op
-    from pyspark_validator.incremental import _IncrementalState
+    assert len(eng.state.live_batches()) == 2
+    post = [(i,) for i in range(20) if i != 5] + [(100,), (101,), (102,), (200,)]
+    full = ucc_check(spark.createDataFrame(post, ["k"]), ["k"], num_partitions=4)
+    assert _sorted_rows(eng.verdicts(), VERDICT_COLS) == _sorted_rows(
+        full.verdicts(), VERDICT_COLS
+    )
 
-    empty = _IncrementalState(spark, str(tmp_path / "none"))
-    assert empty.vacuum() == {"manifests_deleted": 0, "dirs_deleted": 0}
+    empty = IncrementalUCC(spark, str(tmp_path / "none"), ["k"], num_partitions=4)
+    empty.compact()
+    assert not os.path.exists(tmp_path / "none")
+
+
+# ---- kill safety: each case is built on disk, or by making the delete step
+# raise; verdicts() must equal the uninterrupted state's and a static check
+# on the post-delta table.
+
+KILL_BASE = [(i % 30, f"y{i % 30 % 4}") for i in range(90)]
+KILL_INSERTS = [(3, "OTHER"), (40, "y0"), (41, "y1")]
+KILL_DELETES = [(5, "y1"), (7, "y3")]
+
+
+def _killable_engines(spark, root):
+    """An IncrementalUCC and an IncrementalFD after one insert+delete delta,
+    plus the static verdicts of the post-delta table."""
+    base = spark.createDataFrame(KILL_BASE, ["x", "y"])
+    ins = spark.createDataFrame(KILL_INSERTS, ["x", "y"])
+    dels = spark.createDataFrame(KILL_DELETES, ["x", "y"])
+    post_rows = KILL_BASE + KILL_INSERTS
+    for r in KILL_DELETES:
+        post_rows.remove(r)
+    post = spark.createDataFrame(post_rows, ["x", "y"])
+    ucc = IncrementalUCC(spark, f"{root}/ucc", ["x"], num_partitions=4)
+    fd = IncrementalFD(spark, f"{root}/fd", ["x"], ["y"], num_partitions=4)
+    for eng in (ucc, fd):
+        eng.initialize(base)
+        eng.apply_delta(inserts=ins, deletes=dels)
+    want = {
+        "ucc": _sorted_rows(ucc_check(post, ["x"], num_partitions=4).verdicts(), VERDICT_COLS),
+        "fd": _sorted_rows(
+            fd_check(post, ["x"], ["y"], num_partitions=4).verdicts(), FD_VERDICT_COLS
+        ),
+    }
+    return {"ucc": ucc, "fd": fd}, want
+
+
+def _assert_verdicts(engines, want):
+    assert _sorted_rows(engines["ucc"].verdicts(), VERDICT_COLS) == want["ucc"]
+    assert _sorted_rows(engines["fd"].verdicts(), FD_VERDICT_COLS) == want["fd"]
+    assert want["ucc"] and not all(r[-1] for r in want["ucc"] + want["fd"])
+
+
+def test_kill_during_delta_leaves_only_temporary(spark, tmp_path):
+    """A delta killed before its job commit leaves a batch directory that
+    holds only ``_temporary`` (with a task file in it): it is not read."""
+    engines, want = _killable_engines(spark, str(tmp_path))
+    for name, eng in engines.items():
+        root = eng.state.path
+        [delta] = [b for b in _batches(root) if b.endswith("-delta")]
+        seq = int(delta.split("=", 1)[1].split("-")[0]) + 1
+        staged = os.path.join(root, f"batch={seq:012d}-delta", "_temporary", "0")
+        shutil.copytree(os.path.join(root, delta), staged)
+        assert len(eng.state.live_batches()) == 2
+    _assert_verdicts(engines, want)
+    # the next delta goes after the killed one and is read
+    for eng in engines.values():
+        eng.apply_delta(inserts=spark.createDataFrame([(50, "y0")], ["x", "y"]))
+        eng.apply_delta(deletes=spark.createDataFrame([(50, "y0")], ["x", "y"]))
+    _assert_verdicts(engines, want)
+
+
+def test_kill_before_compaction_base_commits(spark, tmp_path):
+    """A compaction killed inside its base's job commit: some of the base's
+    partitions are in place, but without ``_SUCCESS`` the old base and
+    deltas stay the state."""
+    engines, want = _killable_engines(spark, str(tmp_path))
+    for eng in engines.values():
+        eng.state.append(eng._fold(eng.state.read()), base=True)
+        base = os.path.join(eng.state.path, _batches(eng.state.path)[-1])
+        os.remove(os.path.join(base, "_SUCCESS"))
+        pdirs = sorted(n for n in os.listdir(base) if n.startswith("partition_id="))
+        shutil.rmtree(os.path.join(base, pdirs[0]))
+        assert len(eng.state.live_batches()) == 2
+    _assert_verdicts(engines, want)
+    for eng in engines.values():  # a later compaction supersedes it all
+        eng.compact()
+        assert len(_batches(eng.state.path)) == 1
+    _assert_verdicts(engines, want)
+
+
+def test_kill_after_compaction_base_commits(spark, tmp_path, monkeypatch):
+    """A compaction killed after its base committed and before the
+    superseded batches were deleted: the new base alone is read; the next
+    compaction deletes the leftovers."""
+    from pyspark_validator.checkpoint import StateLog
+
+    engines, want = _killable_engines(spark, str(tmp_path))
+
+    def killed(self, batch):
+        raise RuntimeError("killed before the delete")
+
+    with monkeypatch.context() as m:
+        m.setattr(StateLog, "_delete", killed)
+        for eng in engines.values():
+            with pytest.raises(RuntimeError, match="killed"):
+                eng.compact()
+            assert len(_batches(eng.state.path)) == 3
+            assert len(eng.state.live_batches()) == 1
+    _assert_verdicts(engines, want)
+    for eng in engines.values():
+        eng.compact()
+        assert len(_batches(eng.state.path)) == 1
+    _assert_verdicts(engines, want)

@@ -433,8 +433,9 @@ def test_sfd_chi2_matches_pandas_oracle(spark, rows):
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_incremental_ucc_random_deltas_match_batch(spark, tmp_path_factory, base, deltas):
     """After ANY sequence of insert/delete batches, the incremental verdicts
-    must equal a from-scratch batch recompute on the equivalent multiset
-    (deletes clamp at zero per DynPLI's existing-row precondition)."""
+    must equal a from-scratch batch recompute on the equivalent multiset.
+    Deletes reference existing rows (DynPLI's precondition, the engine's
+    contract): a drawn delete of a key with no row left is not sent."""
     from collections import Counter
 
     from pyspark_validator.incremental import IncrementalUCC
@@ -443,7 +444,13 @@ def test_incremental_ucc_random_deltas_match_batch(spark, tmp_path_factory, base
     inc = IncrementalUCC(spark, path, ["k"], num_partitions=4)
     inc.initialize(spark.createDataFrame([(k,) for k in base], "k long"))
     counts = Counter(base)
-    for ins, dels in deltas:
+    for ins, drawn in deltas:
+        counts.update(ins)
+        dels = []
+        for k in drawn:
+            if counts[k] > 0:
+                counts[k] -= 1
+                dels.append(k)
         kw = {}
         if ins:
             kw["inserts"] = spark.createDataFrame([(k,) for k in ins], "k long")
@@ -452,10 +459,6 @@ def test_incremental_ucc_random_deltas_match_batch(spark, tmp_path_factory, base
         if not kw:
             continue
         inc.apply_delta(**kw)
-        counts.update(ins)
-        for k in dels:
-            if counts[k] > 0:
-                counts[k] -= 1
     post = [(k,) for k, c in counts.items() for _ in range(c)]
     if not post:
         assert inc.verdicts().count() == 0
