@@ -252,28 +252,32 @@ KILL_INSERTS = [(3, "OTHER"), (40, "y0"), (41, "y1")]
 KILL_DELETES = [(5, "y1"), (7, "y3")]
 
 
-def _killable_engines(spark, root):
-    """An IncrementalUCC and an IncrementalFD after one insert+delete delta,
-    plus the static verdicts of the post-delta table."""
-    base = spark.createDataFrame(KILL_BASE, ["x", "y"])
-    ins = spark.createDataFrame(KILL_INSERTS, ["x", "y"])
-    dels = spark.createDataFrame(KILL_DELETES, ["x", "y"])
+@pytest.fixture(scope="module")
+def kill_want(spark):
+    """Static ``ucc_check``/``fd_check`` verdicts of the post-delta table."""
     post_rows = KILL_BASE + KILL_INSERTS
     for r in KILL_DELETES:
         post_rows.remove(r)
     post = spark.createDataFrame(post_rows, ["x", "y"])
-    ucc = IncrementalUCC(spark, f"{root}/ucc", ["x"], num_partitions=4)
-    fd = IncrementalFD(spark, f"{root}/fd", ["x"], ["y"], num_partitions=4)
-    for eng in (ucc, fd):
-        eng.initialize(base)
-        eng.apply_delta(inserts=ins, deletes=dels)
-    want = {
+    return {
         "ucc": _sorted_rows(ucc_check(post, ["x"], num_partitions=4).verdicts(), VERDICT_COLS),
         "fd": _sorted_rows(
             fd_check(post, ["x"], ["y"], num_partitions=4).verdicts(), FD_VERDICT_COLS
         ),
     }
-    return {"ucc": ucc, "fd": fd}, want
+
+
+def _killable_engines(spark, root):
+    """An IncrementalUCC and an IncrementalFD after one insert+delete delta."""
+    base = spark.createDataFrame(KILL_BASE, ["x", "y"])
+    ins = spark.createDataFrame(KILL_INSERTS, ["x", "y"])
+    dels = spark.createDataFrame(KILL_DELETES, ["x", "y"])
+    ucc = IncrementalUCC(spark, f"{root}/ucc", ["x"], num_partitions=4)
+    fd = IncrementalFD(spark, f"{root}/fd", ["x"], ["y"], num_partitions=4)
+    for eng in (ucc, fd):
+        eng.initialize(base)
+        eng.apply_delta(inserts=ins, deletes=dels)
+    return {"ucc": ucc, "fd": fd}
 
 
 def _assert_verdicts(engines, want):
@@ -282,10 +286,10 @@ def _assert_verdicts(engines, want):
     assert want["ucc"] and not all(r[-1] for r in want["ucc"] + want["fd"])
 
 
-def test_kill_during_delta_leaves_only_temporary(spark, tmp_path):
+def test_kill_during_delta_leaves_only_temporary(spark, tmp_path, kill_want):
     """A delta killed before its job commit leaves a batch directory that
     holds only ``_temporary`` (with a task file in it): it is not read."""
-    engines, want = _killable_engines(spark, str(tmp_path))
+    engines, want = _killable_engines(spark, str(tmp_path)), kill_want
     for name, eng in engines.items():
         root = eng.state.path
         [delta] = [b for b in _batches(root) if b.endswith("-delta")]
@@ -301,11 +305,11 @@ def test_kill_during_delta_leaves_only_temporary(spark, tmp_path):
     _assert_verdicts(engines, want)
 
 
-def test_kill_before_compaction_base_commits(spark, tmp_path):
+def test_kill_before_compaction_base_commits(spark, tmp_path, kill_want):
     """A compaction killed inside its base's job commit: some of the base's
     partitions are in place, but without ``_SUCCESS`` the old base and
     deltas stay the state."""
-    engines, want = _killable_engines(spark, str(tmp_path))
+    engines, want = _killable_engines(spark, str(tmp_path)), kill_want
     for eng in engines.values():
         eng.state.append(eng._fold(eng.state.read()), base=True)
         base = os.path.join(eng.state.path, _batches(eng.state.path)[-1])
@@ -320,13 +324,13 @@ def test_kill_before_compaction_base_commits(spark, tmp_path):
     _assert_verdicts(engines, want)
 
 
-def test_kill_after_compaction_base_commits(spark, tmp_path, monkeypatch):
+def test_kill_after_compaction_base_commits(spark, tmp_path, monkeypatch, kill_want):
     """A compaction killed after its base committed and before the
     superseded batches were deleted: the new base alone is read; the next
     compaction deletes the leftovers."""
     from pyspark_validator.checkpoint import StateLog
 
-    engines, want = _killable_engines(spark, str(tmp_path))
+    engines, want = _killable_engines(spark, str(tmp_path)), kill_want
 
     def killed(self, batch):
         raise RuntimeError("killed before the delete")
